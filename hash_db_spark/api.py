@@ -20,11 +20,17 @@ endpoint→method rename:
     POST /save/<coll>/<id>  (server.py:289)   save(collection, doc_id, obj)
     GET  /documents/<coll>/<id>               document(collection, doc_id)
 
-State model: the KV table, the SQL catalog, and the graph frames are
-in-memory DataFrames owned by this object and replaced functionally on
-every mutation (kv_set/merge return new frames). On a deployment these
-become Delta tables and the mutations MERGE/append — the method surface
-does not change. Documents are stored as raw JSON per collection and
+State model: the SQL catalog and the graph frames are in-memory
+DataFrames owned by this object and replaced functionally on every
+mutation (merge returns new frames). The KV table is a checkpointed base
+DataFrame plus a bounded driver dict of pending writes (the delta, with
+None as a tombstone): set/clear touch only the dict, and once it holds
+_CHECKPOINT_EVERY keys one anti-join + union + checkpoint folds it into
+the base, as an LSM tree flushes its memtable. Reads overlay the delta on
+what they collect from the base, so an answer never depends on whether a
+key has been folded yet. On a deployment these become Delta tables and
+the mutations MERGE/append — the method surface does not change.
+Documents are stored as raw JSON per collection and
 registered with the SQL engine as a schema-inferred nested view, so the
 reference's `select people.~hobbies[]~name from people` path queries run
 unchanged (server.py:320-328 co-inserts shredded leaves for the same
@@ -50,12 +56,15 @@ _NODES_SCHEMA = "id string, label string, name string, attrs map<string,string>"
 _EDGES_SCHEMA = "src string, dst string, rel string"
 
 
-# Per-mutation facade calls (set/clear/merge) each add an anti-join +
-# union layer on the previous plan; past this many layers the lineage is
-# cut with a lazy localCheckpoint so a long interactive session stays
-# O(_CHECKPOINT_EVERY) plan depth instead of O(total mutations). Bulk
-# ingest should still go through kv_set with a batch frame — this guard
-# is for the reference-demo interactive shape, not the ingest path.
+# The KV delta folds into the base once it holds this many distinct keys,
+# and Cypher checkpoints its frames after this many merges. Each fold or
+# merge adds an anti-join + union layer to the previous plan; an eager
+# checkpoint cuts it, so a long interactive session stays at
+# O(_CHECKPOINT_EVERY) plan depth instead of O(total mutations). (A lazy
+# checkpoint never materializes under a pure write burst, so the layers
+# would still stack.) Bulk ingest should still go through kv_set with a
+# batch frame — this guard is for the reference-demo interactive shape,
+# not the ingest path.
 _CHECKPOINT_EVERY = 24
 
 
@@ -64,81 +73,116 @@ class HashDb:
         self, spark: SparkSession, tables: dict[str, DataFrame] | None = None
     ):
         self.spark = spark
-        self.kv = spark.createDataFrame([], _KV_SCHEMA)
+        # An empty RDD has no partitions, so reads of a fresh store run no
+        # tasks; createDataFrame([]) scans empty Python partitions.
+        self.kv = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), _KV_SCHEMA
+        )
         self.engine = SqlEngine(spark, tables or {})
         self.nodes = spark.createDataFrame([], _NODES_SCHEMA)
         self.edges = spark.createDataFrame([], _EDGES_SCHEMA)
         self._docs: dict[str, dict[str, str]] = {}  # collection -> id -> json
-        self._kv_mutations = 0
         self._graph_mutations = 0
 
-    def _trim_kv_lineage(self) -> None:
-        self._kv_mutations += 1
-        if self._kv_mutations % _CHECKPOINT_EVERY == 0:
-            # eager: a lazy checkpoint never materializes without an
-            # action, so under a pure mutation burst the stacked markers
-            # would still carry the full lineage (measured: 500 set()
-            # calls grew 42s -> 89s -> 182s per-100 with eager=False).
-            # One tiny Spark job per _CHECKPOINT_EVERY mutations keeps
-            # both plan depth and analysis time flat.
-            self.kv = self._capped_checkpoint(self.kv)
-
     def _capped_checkpoint(self, df: DataFrame) -> DataFrame:
-        # localCheckpoint preserves the physical partitioning, and each
-        # union-style mutation appends its own partition(s) — measured
-        # +1 partition PER MUTATION surviving every checkpoint, so a
-        # long session's checkpoint jobs grow linearly in task count
-        # even though plan depth stays flat. coalesce is narrow (no
-        # shuffle) and a no-op when already at or under the cap, so a
-        # genuinely large table on a cluster keeps defaultParallelism-
-        # wide layout while an interactive session stays flat.
+        # Callers: the KV fold (its only KV caller) and every
+        # _CHECKPOINT_EVERY-th Cypher merge. localCheckpoint preserves
+        # the physical partitioning, and each union-style mutation
+        # appends its own partition(s) — measured +1 partition PER
+        # MUTATION surviving every checkpoint, so a long session's
+        # checkpoint jobs grow linearly in task count even though plan
+        # depth stays flat. coalesce is narrow (no shuffle) and a no-op
+        # when already at or under the cap, so a genuinely large table on
+        # a cluster keeps defaultParallelism-wide layout while an
+        # interactive session stays flat. Being narrow, it also runs the
+        # whole upstream plan (the fold's anti-join + union) in at most
+        # defaultParallelism tasks, not only the persisted layout.
         return df.coalesce(
             self.spark.sparkContext.defaultParallelism
         ).localCheckpoint()
 
     # -- KV (K1-K9) ---------------------------------------------------------
 
+    @property
+    def kv(self) -> DataFrame:
+        """The KV table: the base with the pending delta overlaid."""
+        if not self._kv_delta:
+            return self._kv_base
+        delta = local_frame(
+            self.spark,
+            [(pk, sk, v) for (pk, sk), v in self._kv_delta.items()],
+            _KV_SCHEMA,
+        )
+        return K.kv_apply(self._kv_base, delta)
+
+    @kv.setter
+    def kv(self, df: DataFrame) -> None:
+        """Replace the whole KV table; pending writes are dropped."""
+        self._kv_base = df
+        self._kv_delta: dict[tuple[str | None, str | None], str | None] = {}
+
+    def _write(self, pk, sk, value: str | None) -> None:
+        # Reject a bad key before it reaches the delta, where it would
+        # make every later fold fail.
+        for key in (pk, sk):
+            if key is not None and not isinstance(key, str):
+                raise TypeError(f"KV keys are str or None, got {key!r}")
+        self._kv_delta[(pk, sk)] = value
+        if len(self._kv_delta) >= _CHECKPOINT_EVERY:
+            self.kv = self._capped_checkpoint(self.kv)
+
     def set(self, pk: str, sk: str, value: str) -> None:
-        row = local_frame(self.spark, [(pk, sk, str(value))], _KV_SCHEMA)
-        self.kv = K.kv_set(self.kv, row)
-        self._trim_kv_lineage()
+        self._write(pk, sk, str(value))
 
     def get(self, pk: str, sk: str) -> str | None:
-        rows = K.kv_get(self.kv, pk, sk).collect()
+        if pk is None or sk is None:
+            return None  # a NULL key never matches `=`, as in K.kv_get
+        if (pk, sk) in self._kv_delta:
+            return self._kv_delta[(pk, sk)]
+        rows = K.kv_get(self._kv_base, pk, sk).collect()
         return rows[0].value if rows else None
 
     def clear(self, pk: str, sk: str) -> None:
-        self.kv = K.kv_clear(self.kv, pk, sk)
-        self._trim_kv_lineage()
+        self._write(pk, sk, None)
 
-    def _rows(self, df: DataFrame) -> list[tuple[str, str, str]]:
-        return [(r.pk, r.sk, r.value) for r in df.collect()]
+    def _rows(self, where: K.Where, desc: bool) -> list[tuple[str, str, str]]:
+        """One Spark job: collect the base rows ``where`` selects, then
+        overlay the delta and sort by (pk, sk) on the driver. A collected
+        row never has a NULL key, because every predicate filters both
+        keys, so the sort needs no nulls-first rule."""
+        rows = [
+            (r.pk, r.sk, r.value)
+            for r in self._kv_base.filter(where.col).collect()
+        ]
+        if self._kv_delta:
+            rows = [r for r in rows if r[:2] not in self._kv_delta]
+            rows += [
+                (pk, sk, v)
+                for (pk, sk), v in self._kv_delta.items()
+                if v is not None and where.match(pk, sk)
+            ]
+        rows.sort(key=lambda r: r[:2], reverse=desc)
+        return rows
 
     def query_begins(self, pk, sk_prefix, desc=False):
-        return self._rows(K.query_begins(self.kv, pk, sk_prefix, desc))
+        return self._rows(K.where_begins(pk, sk_prefix), desc)
 
     def query_pk_sk_begins(self, pk_prefix, sk_prefix="", desc=False):
-        return self._rows(
-            K.query_pk_sk_begins(self.kv, pk_prefix, sk_prefix, desc)
-        )
+        return self._rows(K.where_pk_sk_begins(pk_prefix, sk_prefix), desc)
 
     def query_between(self, pk, sk_lo, sk_hi, desc=False):
-        return self._rows(K.query_between(self.kv, pk, sk_lo, sk_hi, desc))
+        return self._rows(K.where_between(pk, sk_lo, sk_hi), desc)
 
     def both_between(self, pk_lo, pk_hi, sk_lo, sk_hi, desc=False):
         return self._rows(
-            K.both_between(self.kv, pk_lo, pk_hi, sk_lo, sk_hi, desc)
+            K.where_both_between(pk_lo, pk_hi, sk_lo, sk_hi), desc
         )
 
     def query_before_than(self, pk, sk_prefix, bound, desc=False):
-        return self._rows(
-            K.query_before_than(self.kv, pk, sk_prefix, bound, desc)
-        )
+        return self._rows(K.where_before(pk, sk_prefix, bound), desc)
 
     def query_greater_than(self, pk, sk_prefix, bound, desc=False):
-        return self._rows(
-            K.query_greater_than(self.kv, pk, sk_prefix, bound, desc)
-        )
+        return self._rows(K.where_after(pk, sk_prefix, bound), desc)
 
     # -- SQL ----------------------------------------------------------------
 

@@ -73,9 +73,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
             "spark.driver.memory",
-            os.environ.get(
-                "SPARK_DRIVER_MEMORY", _default_driver_memory(int(cpus))
-            ),
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or _default_driver_memory(int(cpus)),
         )
         # A long-lived session accumulates localCheckpoint RDD blocks and
         # broadcasts whose cleanup rides on JVM GC (ContextCleaner uses

@@ -199,6 +199,68 @@ def test_mutation_lineage_stays_flat(spark, monkeypatch):
     assert len(db.query_begins("pk2", "sk")) == 20
 
 
+def test_non_string_kv_key_is_rejected(spark):
+    """A key that is neither str nor None raises before it reaches the
+    pending writes, so it cannot break a later fold."""
+    db = HashDb(spark)
+    with pytest.raises(TypeError):
+        db.set(1, "sk", "v")
+    with pytest.raises(TypeError):
+        db.clear("pk", 2)
+    assert db.kv.collect() == []
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under a job group of its own; return its result and
+    the number of Spark jobs it started, read back from the status
+    tracker once the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"facade-verb-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_facade_spark_jobs_per_verb(spark):
+    """A facade range verb is one Spark job (filter + collect; the sort
+    runs on the driver), with or without pending writes. set/clear below
+    the fold threshold start no job; a get answered from the pending
+    writes starts none, and one that misses them starts one."""
+    db = HashDb(spark)
+    for i in range(4):
+        db.set("user#a", f"m#{i}", f"v{i}")
+    db.kv = db.kv.localCheckpoint()  # a clean base, no pending writes
+
+    assert _spark_jobs(spark, lambda: db.query_begins("user#a", "m#"))[1] == 1
+    assert _spark_jobs(spark, lambda: db.set("user#a", "m#9", "v9"))[1] == 0
+    assert _spark_jobs(spark, lambda: db.clear("user#a", "m#0"))[1] == 0
+    assert _spark_jobs(spark, lambda: db.get("user#a", "m#9")) == ("v9", 0)
+    assert _spark_jobs(spark, lambda: db.get("user#a", "m#1")) == ("v1", 1)
+    want = [("user#a", f"m#{i}", f"v{i}") for i in (1, 2, 3, 9)]
+    verbs = [
+        (lambda d: db.query_begins("user#a", "m#", desc=d), want),
+        (lambda d: db.query_pk_sk_begins("user#", "m#", desc=d), want),
+        (lambda d: db.query_between("user#a", "m#1", "m#3", desc=d), want[:3]),
+        (lambda d: db.both_between("user#a", "user#b", "m#2", "m#9", desc=d),
+         want[1:]),
+        (lambda d: db.query_before_than("user#a", "m#", "m#3", desc=d),
+         want[:2]),
+        (lambda d: db.query_greater_than("user#a", "m#", "m#2", desc=d),
+         want[2:]),
+    ]
+    for verb, rows in verbs:
+        for desc in (False, True):
+            got, jobs = _spark_jobs(spark, lambda: verb(desc))
+            assert (got, jobs) == (rows[::-1] if desc else rows, 1)
+
+
 def test_sql_script_multi_statement_session(db):
     """The reference example.py drives one POST per statement
     (example.py:86-146); sql_script replays the same session in one

@@ -132,3 +132,35 @@ def test_kv_clear_preserves_null_keyed_rows(spark):
     )
     out = K.kv_clear(kvn, "p", "s")
     assert sorted((r.value) for r in out.collect()) == ["a", "b"]
+
+
+def test_kv_set_replaces_null_keyed_rows(spark):
+    """Re-setting a NULL-keyed row replaces it (the anti-join is
+    null-safe), so the unique-(pk, sk) invariant holds for NULL keys;
+    unrelated rows stay."""
+    schema = "pk string, sk string, value string"
+    kvn = spark.createDataFrame([("p", "s", "c")], schema)
+    for v in ("1", "2"):
+        kvn = K.kv_set(kvn, spark.createDataFrame([(None, "a", v)], schema))
+    got = [(r.pk, r.sk, r.value) for r in kvn.collect()]
+    assert sorted(got, key=str) == [("p", "s", "c"), (None, "a", "2")]
+
+
+def test_kv_apply_folds_upserts_and_tombstones(spark):
+    """A delta replaces every row of its keys, NULL keys and duplicated
+    stored keys included; a NULL value deletes the key."""
+    schema = "pk string, sk string, value string"
+    kv = spark.createDataFrame(
+        [("p", "s", "old"), ("p", "s", "dup"), ("p", "t", "keep"),
+         (None, "s", "n"), ("q", "s", "gone")],
+        schema,
+    )
+    delta = spark.createDataFrame(
+        [("p", "s", "new"), (None, "s", None), ("q", "s", None),
+         ("r", None, "ins")],
+        schema,
+    )
+    got = [(r.pk, r.sk, r.value) for r in K.kv_apply(kv, delta).collect()]
+    assert sorted(got, key=str) == sorted(
+        [("p", "s", "new"), ("p", "t", "keep"), ("r", None, "ins")], key=str
+    )

@@ -5,7 +5,18 @@ Spark round-trips are bounded with small example counts; determinism
 
 from __future__ import annotations
 
+from collections import Counter
+
 from hypothesis import given, settings, strategies as st, HealthCheck
+from hypothesis.stateful import (
+    Bundle,
+    RuleBasedStateMachine,
+    initialize,
+    invariant,
+    multiple,
+    rule,
+    run_state_machine_as_test,
+)
 
 import pyspark.sql.functions as F
 
@@ -65,6 +76,152 @@ def test_kv_between_matches_model(spark, rows, pk, lo, hi):
     assert sorted(got) == model
     # emission order is (pk, sk) ascending (K8)
     assert got == sorted(got)
+
+
+# Few keys, so writes hit stored keys and reads find them; "z" < "é" <
+# "😀" checks that Spark's UTF-8 byte order and Python's code-point order
+# agree, and an occasional None checks that a NULL key matches no read
+# yet is stored, replaced and cleared like any other key. Ranges are drawn
+# ordered, so most of them select rows.
+kv_keys = st.sampled_from(["a", "z", "é", "é😀", "😀", None])
+kv_values = st.sampled_from(["0", "1", "é"])
+kv_bounds = st.sampled_from(["", "a", "z", "é", "😀", "😀😀"])
+kv_ranges = st.tuples(kv_bounds, kv_bounds).map(sorted)
+
+# Each range verb from one draw of a key, two prefixes, two closed ranges
+# and a strict bound: the facade call's arguments, and the model's
+# predicate on a non-NULL (pk, sk).
+KV_RANGE_READS = {
+    "query_begins": lambda k, p, q, r, t, b: (
+        (k, p), lambda pk, sk: pk == k and sk.startswith(p)),
+    "query_pk_sk_begins": lambda k, p, q, r, t, b: (
+        (p, q), lambda pk, sk: pk.startswith(p) and sk.startswith(q)),
+    "query_between": lambda k, p, q, r, t, b: (
+        (k, *r), lambda pk, sk: pk == k and r[0] <= sk <= r[1]),
+    "both_between": lambda k, p, q, r, t, b: (
+        (*r, *t), lambda pk, sk: r[0] <= pk <= r[1] and t[0] <= sk <= t[1]),
+    "query_before_than": lambda k, p, q, r, t, b: (
+        (k, p, b), lambda pk, sk: pk == k and sk.startswith(p) and sk < b),
+    "query_greater_than": lambda k, p, q, r, t, b: (
+        (k, p, b), lambda pk, sk: pk == k and sk.startswith(p) and sk > b),
+}
+
+
+class HashDbKvMachine(RuleBasedStateMachine):
+    """The HashDb KV verbs against a dict model. Every read is compared
+    with the model as it runs; the whole table at teardown. With
+    _CHECKPOINT_EVERY patched to 3, a run crosses several folds, and
+    overwrite/clear/get draw keys already written, so an answer that
+    depends on whether a key has been folded shows up."""
+
+    spark = None  # set by the test before the run
+    written = Bundle("written")
+
+    def __init__(self):
+        super().__init__()
+        from hash_db_spark.api import HashDb
+
+        self.db = HashDb(self.spark)
+        self.model: dict = {}
+
+    @initialize(
+        target=written,
+        rows=st.dictionaries(st.tuples(kv_keys, kv_keys), kv_values, max_size=8),
+    )
+    def load(self, rows):
+        """Start from a stored table, assigned through ``db.kv``."""
+        self.db.kv = self.spark.createDataFrame(
+            [(*k, v) for k, v in rows.items()], "pk string, sk string, value string"
+        ).localCheckpoint()
+        self.model.update(rows)
+        return multiple(*rows)
+
+    @rule(target=written, pk=kv_keys, sk=kv_keys, value=kv_values)
+    def set(self, pk, sk, value):
+        self.db.set(pk, sk, value)
+        self.model[(pk, sk)] = value
+        return (pk, sk)
+
+    @rule(key=written, value=kv_values)
+    def overwrite(self, key, value):
+        self.db.set(*key, value)
+        self.model[key] = value
+
+    @rule(key=written)
+    def clear(self, key):
+        self.db.clear(*key)
+        self.model.pop(key, None)
+
+    @rule(key=written)
+    def get(self, key):
+        want = None if None in key else self.model.get(key)
+        assert self.db.get(*key) == want
+
+    @rule(
+        verb=st.sampled_from(sorted(KV_RANGE_READS)),
+        key=kv_keys,
+        bounds=st.tuples(kv_bounds, kv_bounds, kv_ranges, kv_ranges, kv_bounds),
+        desc=st.booleans(),
+    )
+    def range_read(self, verb, key, bounds, desc):
+        args, match = KV_RANGE_READS[verb](key, *bounds)
+        want = sorted(
+            (
+                (p, s, v)
+                for (p, s), v in self.model.items()
+                if p is not None and s is not None and match(p, s)
+            ),
+            reverse=desc,
+        )
+        assert getattr(self.db, verb)(*args, desc=desc) == want
+
+    @rule(desc=st.booleans())
+    def scan(self, desc):
+        """Every non-NULL key: a read that shows any stored row the
+        pending writes should hide."""
+        self.range_read("query_pk_sk_begins", None, ("", "", None, None, None), desc)
+
+    @rule(key=written, desc=st.booleans())
+    def key_ranges(self, key, desc):
+        """Ranges ending at a written key: a closed end includes it, a
+        strict end excludes it."""
+        pk, sk = key
+        want = [] if None in key or key not in self.model else [
+            (pk, sk, self.model[key])
+        ]
+        assert self.db.query_between(pk, sk, sk, desc) == want
+        assert self.db.both_between(pk, pk, sk, sk, desc) == want
+        strict = self.db.query_before_than(pk, "", sk, desc)
+        strict += self.db.query_greater_than(pk, "", sk, desc)
+        assert key not in [r[:2] for r in strict]
+
+    @rule(key=written)
+    def null_key_reads(self, key):
+        """A NULL key or bound matches nothing, pending or stored."""
+        pk, sk = key
+        assert self.db.get(None, sk) is None and self.db.get(pk, None) is None
+        assert self.db.query_begins(None, "") == []
+        assert self.db.query_between(None, "", "😀😀") == []
+
+    @invariant()
+    def delta_stays_bounded(self):
+        from hash_db_spark import api
+
+        assert len(self.db._kv_delta) < api._CHECKPOINT_EVERY
+
+    def teardown(self):
+        got = Counter((r.pk, r.sk, r.value) for r in self.db.kv.collect())
+        assert got == Counter((p, s, v) for (p, s), v in self.model.items())
+
+
+def test_hashdb_kv_matches_dict_model(spark, monkeypatch):
+    from hash_db_spark import api
+
+    monkeypatch.setattr(api, "_CHECKPOINT_EVERY", 3)
+    monkeypatch.setattr(HashDbKvMachine, "spark", spark)
+    run_state_machine_as_test(
+        HashDbKvMachine, settings=settings(**SETTINGS, stateful_step_count=50)
+    )
 
 
 def _fts_model(text: str, query: str) -> bool:
