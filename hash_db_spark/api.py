@@ -20,16 +20,18 @@ endpoint→method rename:
     POST /save/<coll>/<id>  (server.py:289)   save(collection, doc_id, obj)
     GET  /documents/<coll>/<id>               document(collection, doc_id)
 
-State model: the SQL catalog and the graph frames are in-memory
-DataFrames owned by this object and replaced functionally on every
-mutation (merge returns new frames). The KV table is a checkpointed base
-DataFrame plus a bounded driver dict of pending writes (the delta, with
-None as a tombstone): set/clear touch only the dict, and once it holds
-_CHECKPOINT_EVERY keys one anti-join + union + checkpoint folds it into
-the base, as an LSM tree flushes its memtable. Reads overlay the delta on
-what they collect from the base, so an answer never depends on whether a
-key has been folded yet. On a deployment these become Delta tables and
-the mutations MERGE/append — the method surface does not change.
+State model: every store has one write path. Driver-held rows (an
+INSERT row, a MERGE delta, pending KV writes) enter the plan through
+local_frame, and each write leaves through capped_checkpoint, which caps
+the partition count and cuts the lineage (localframe.py). SQL INSERT and
+UPDATE and Cypher MERGE do that per statement. The KV table is a
+checkpointed base plus a bounded driver dict of pending writes (None as a
+tombstone): set/clear touch only the dict, and once it holds
+_CHECKPOINT_EVERY keys one anti-join + union + capped checkpoint folds it
+into the base, as an LSM tree flushes its memtable. Reads overlay the
+delta on what they collect from the base, so an answer never depends on
+whether a key has been folded yet. On a deployment these become Delta
+tables and the writes MERGE/append — the method surface does not change.
 Documents are stored as raw JSON per collection and
 registered with the SQL engine as a schema-inferred nested view, so the
 reference's `select people.~hobbies[]~name from people` path queries run
@@ -49,22 +51,19 @@ from hash_db_spark.operators import kv as K
 from hash_db_spark.operators.documents import shred_infer
 from hash_db_spark.sql import SqlEngine
 
-from hash_db_spark.localframe import local_frame
+from hash_db_spark.localframe import capped_checkpoint, local_frame
 
 _KV_SCHEMA = "pk string, sk string, value string"
 _NODES_SCHEMA = "id string, label string, name string, attrs map<string,string>"
 _EDGES_SCHEMA = "src string, dst string, rel string"
 
 
-# The KV delta folds into the base once it holds this many distinct keys,
-# and Cypher checkpoints its frames after this many merges. Each fold or
-# merge adds an anti-join + union layer to the previous plan; an eager
-# checkpoint cuts it, so a long interactive session stays at
-# O(_CHECKPOINT_EVERY) plan depth instead of O(total mutations). (A lazy
-# checkpoint never materializes under a pure write burst, so the layers
-# would still stack.) Bulk ingest should still go through kv_set with a
-# batch frame — this guard is for the reference-demo interactive shape,
-# not the ingest path.
+# The KV delta folds into the base once it holds this many distinct keys.
+# The fold adds an anti-join + union layer to the base's plan and its
+# capped checkpoint cuts it, so a long interactive session stays at a
+# flat plan depth instead of O(total mutations). Bulk ingest should still
+# go through kv_set with a batch frame — this guard is for the
+# reference-demo interactive shape, not the ingest path.
 _CHECKPOINT_EVERY = 24
 
 
@@ -73,33 +72,11 @@ class HashDb:
         self, spark: SparkSession, tables: dict[str, DataFrame] | None = None
     ):
         self.spark = spark
-        # An empty RDD has no partitions, so reads of a fresh store run no
-        # tasks; createDataFrame([]) scans empty Python partitions.
-        self.kv = spark.createDataFrame(
-            spark.sparkContext.emptyRDD(), _KV_SCHEMA
-        )
+        self.kv = local_frame(spark, [], _KV_SCHEMA)
         self.engine = SqlEngine(spark, tables or {})
-        self.nodes = spark.createDataFrame([], _NODES_SCHEMA)
-        self.edges = spark.createDataFrame([], _EDGES_SCHEMA)
+        self.nodes = local_frame(spark, [], _NODES_SCHEMA)
+        self.edges = local_frame(spark, [], _EDGES_SCHEMA)
         self._docs: dict[str, dict[str, str]] = {}  # collection -> id -> json
-        self._graph_mutations = 0
-
-    def _capped_checkpoint(self, df: DataFrame) -> DataFrame:
-        # Callers: the KV fold (its only KV caller) and every
-        # _CHECKPOINT_EVERY-th Cypher merge. localCheckpoint preserves
-        # the physical partitioning, and each union-style mutation
-        # appends its own partition(s) — measured +1 partition PER
-        # MUTATION surviving every checkpoint, so a long session's
-        # checkpoint jobs grow linearly in task count even though plan
-        # depth stays flat. coalesce is narrow (no shuffle) and a no-op
-        # when already at or under the cap, so a genuinely large table on
-        # a cluster keeps defaultParallelism-wide layout while an
-        # interactive session stays flat. Being narrow, it also runs the
-        # whole upstream plan (the fold's anti-join + union) in at most
-        # defaultParallelism tasks, not only the persisted layout.
-        return df.coalesce(
-            self.spark.sparkContext.defaultParallelism
-        ).localCheckpoint()
 
     # -- KV (K1-K9) ---------------------------------------------------------
 
@@ -129,7 +106,7 @@ class HashDb:
                 raise TypeError(f"KV keys are str or None, got {key!r}")
         self._kv_delta[(pk, sk)] = value
         if len(self._kv_delta) >= _CHECKPOINT_EVERY:
-            self.kv = self._capped_checkpoint(self.kv)
+            self.kv = capped_checkpoint(self.kv)
 
     def set(self, pk: str, sk: str, value: str) -> None:
         self._write(pk, sk, str(value))
@@ -237,10 +214,6 @@ class HashDb:
         result = CypherCompiler(self.nodes, self.edges).run(statement)
         if isinstance(result, tuple):
             self.nodes, self.edges = result
-            self._graph_mutations += 1
-            if self._graph_mutations % _CHECKPOINT_EVERY == 0:
-                self.nodes = self._capped_checkpoint(self.nodes)
-                self.edges = self._capped_checkpoint(self.edges)
             return None
         return [r.asDict(recursive=True) for r in result.collect()]
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from hash_db_spark.cypher.parser import CypherParser, Edge, Node
+from hash_db_spark.localframe import capped_checkpoint, local_frame
 
 
 class CypherCompiler:
@@ -338,11 +339,14 @@ class CypherCompiler:
         edge upsert is idempotent append (G2/G3). Implemented as anti-join
         + union — on Delta-backed storage this is a MERGE INTO.
 
-        The result is eagerly localCheckpoint()ed: each merge's plan
-        references the previous nodes frame twice (union + anti-join), so
-        chained merges would otherwise grow the logical plan 2^n and OOM
-        the driver during analysis. A materialized upsert per batch is
-        also what the Delta path does.
+        Both outputs leave through capped_checkpoint. The checkpoint cuts
+        the lineage: each merge's plan references the previous nodes frame
+        twice (union + anti-join), so chained merges would otherwise grow
+        the logical plan 2^n and OOM the driver during analysis. The cap
+        keeps the layout flat: each union appends the delta's partitions,
+        so without it a graph would gain partitions on every merge and
+        every later MATCH and MERGE would run more tasks. A materialized
+        upsert per batch is also what the Delta path does.
         """
         spark = self.nodes.sparkSession
         # Driver-side first-wins dedupe: a pattern mentioning the same
@@ -373,12 +377,13 @@ class CypherCompiler:
                 src, dst = (id1, id2) if edge.direction == "right" else (id2, id1)
                 new_edges.setdefault((src, dst, edge.name), (src, dst, edge.name))
 
-        nodes_delta = spark.createDataFrame(
-            list(new_nodes.values()),
+        nodes_delta = local_frame(
+            spark,
+            new_nodes.values(),
             "id string, label string, name string, attrs map<string,string>",
         )
-        edges_delta = spark.createDataFrame(
-            list(new_edges.values()), "src string, dst string, rel string"
+        edges_delta = local_frame(
+            spark, new_edges.values(), "src string, dst string, rel string"
         )
         # Node identity is lower(label):name (reference id scheme; MATCH
         # still compares labels case-sensitively). A merge whose id
@@ -407,10 +412,7 @@ class CypherCompiler:
         edges_out = self.edges.unionByName(
             edges_delta.join(self.edges, ["src", "dst", "rel"], "left_anti")
         )
-        return (
-            nodes_out.localCheckpoint(eager=True),
-            edges_out.localCheckpoint(eager=True),
-        )
+        return capped_checkpoint(nodes_out), capped_checkpoint(edges_out)
 
     def merge_many(self, statements: list[str]) -> tuple[DataFrame, DataFrame]:
         """Apply a sequence of MERGE statements as ONE batched upsert.

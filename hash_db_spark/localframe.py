@@ -1,17 +1,21 @@
-"""Driver-local DataFrames as JVM LocalRelations, not Python RDDs.
+"""The facade's two ends for driver-held data: rows enter a plan through
+``local_frame`` and every store write leaves through ``capped_checkpoint``.
 
 ``spark.createDataFrame(list_of_rows, schema)`` produces a LogicalRDD
 plan: the rows live in a pickled Python RDD, and the FIRST action on
 any plan containing it pays a Python-worker scan measured at 1.7-4.2s
 on this machine (subsequent actions ~1s) — a pure driver-side tax on
 every bounded metadata frame (version pointers, centroid tables,
-query-literal frames, iterative-loop results).
+query-literal frames, iterative-loop results, INSERT rows, MERGE deltas).
 
 Routing the same rows through a pandas DataFrame converts them at
 BUILD time via Arrow into a LocalRelation embedded in the JVM plan:
 first action 0.3-0.7s, no Python worker involved, identical schema and
-values (verified: ints, strings, doubles, arrays, None cells). This is
-guide §5 ("the driver should do almost no data work") applied to plan
+values (verified: ints, strings, doubles, arrays, maps, None cells).
+An empty list becomes a frame over an empty RDD: zero partitions, so
+reads of it schedule no tasks at all (``createDataFrame([])`` would
+scan defaultParallelism empty Python partitions). This is guide §5
+("the driver should do almost no data work") applied to plan
 construction.
 
 Only bounded frames belong here — every caller already holds the rows
@@ -39,9 +43,7 @@ def local_frame(
 
     rows = list(rows)
     if not rows:
-        # an empty list has no Python rows to scan; the empty LogicalRDD
-        # materializes without a Python worker pass
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
     if isinstance(rows[0], dict):
         # dict rows map by KEY in createDataFrame but from_records would
         # order columns by first-seen key — a silent positional mismatch
@@ -55,3 +57,19 @@ def local_frame(
         # dtype pandas/Arrow cannot represent (Decimal edge cases, raw
         # Row objects with nested Rows, ...): correctness over speed
         return spark.createDataFrame(rows, schema)
+
+
+def capped_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize a facade store write (KV fold, SQL INSERT/UPDATE,
+    Cypher MERGE) and cut its lineage, so a long session keeps a flat
+    plan. localCheckpoint preserves the physical partitioning, and each
+    union-style write appends its own partition(s) — measured +1
+    partition PER WRITE surviving every checkpoint, so every later read
+    and write would run ever more tasks. coalesce is narrow (no shuffle)
+    and a no-op when already at or under the cap, so a genuinely large
+    table on a cluster keeps a defaultParallelism-wide layout while an
+    interactive store stays flat. Being narrow, it also runs the final
+    stage of the write (the union with its anti-join or new rows) in at
+    most defaultParallelism tasks, not only the persisted layout."""
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    return df.coalesce(cap).localCheckpoint()

@@ -26,8 +26,10 @@ incrementally-computable view instead of re-joining on every insert
 efficient" — the streaming materialization in streaming/windows.py is the
 scalable equivalent).
 
-Tables live in a mutable name→DataFrame catalog; INSERT/UPDATE replace
-catalog entries.
+Tables live in a mutable name→DataFrame catalog. INSERT and UPDATE
+write the one way every facade store does: the INSERT row enters through
+local_frame, and the new table leaves through capped_checkpoint before
+it replaces the catalog entry, so a statement that raises changes nothing.
 """
 
 from __future__ import annotations
@@ -36,11 +38,14 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
+from hash_db_spark.localframe import capped_checkpoint, local_frame
 from hash_db_spark.operators.fts import compile_fts, compile_phrase
 from hash_db_spark.operators.relational import insert_rows, update_where
 
 _STR = r"'([^']*)'"
+_TYPES = {str: T.StringType(), int: T.LongType(), float: T.DoubleType()}
 _REF = r"([A-Za-z_][\w]*)\.([\w~\[\]]+)"
 
 
@@ -216,8 +221,11 @@ class SqlEngine:
         values = self._split_values(values_s)
         if len(fields) != len(values):
             raise ValueError(f"insert arity mismatch: {fields} vs {values}")
-        row = dict(zip(fields, values))
-        new = self.spark.createDataFrame([row])
+        # Columns in name order and types by literal, as createDataFrame
+        # infers them from a dict row.
+        row = sorted(dict(zip(fields, values)).items())
+        schema = T.StructType([T.StructField(f, _TYPES[type(v)]) for f, v in row])
+        new = local_frame(self.spark, [tuple(v for _, v in row)], schema)
         base = self.tables.get(table)
         if base is None:
             # First insert creates the table (no DDL in the dialect —
@@ -225,7 +233,7 @@ class SqlEngine:
             out = new.withColumn("id", F.lit(1).cast("long"))
         else:
             out = insert_rows(base, new, id_col="id")
-        self.tables[table] = out.localCheckpoint(eager=True)
+        self.tables[table] = capped_checkpoint(out)
         return None
 
     def _split_values(self, s: str) -> list:
@@ -315,9 +323,7 @@ class SqlEngine:
             for ref, q in fts:
                 _, fld = ref.split(".", 1)
                 cond = cond & _fts_or_phrase(fld, q)
-        self.tables[table] = update_where(df, cond, assignments).localCheckpoint(
-            eager=True
-        )
+        self.tables[table] = capped_checkpoint(update_where(df, cond, assignments))
         return None
 
     def _select(self, text: str):

@@ -199,6 +199,74 @@ def test_mutation_lineage_stays_flat(spark, monkeypatch):
     assert len(db.query_begins("pk2", "sk")) == 20
 
 
+def _graph_rows(db):
+    nodes = sorted(
+        (r.id, r.label, r.name, sorted(r.attrs.items()))
+        for r in db.nodes.collect()
+    )
+    return nodes, sorted(tuple(r) for r in db.edges.collect())
+
+
+def test_store_shape_stays_flat(spark):
+    """Every store write leaves through one capped checkpoint, so a SQL
+    table and the graph frames hold at most defaultParallelism
+    partitions however many statements wrote them (each union-style
+    write used to append its own partitions), and their rows still
+    follow the statements."""
+    cap = spark.sparkContext.defaultParallelism
+    n = 3 * cap
+    db = HashDb(spark)
+    model: dict[int, dict] = {}
+    for i in range(n):
+        db.sql(f"insert into shape (shape_name, age) values ('s{i}', {i})")
+        model[i + 1] = {"id": i + 1, "shape_name": f"s{i}", "age": i}
+        db.sql(f"update shape set shape.age = {10 * i} "
+               f"where shape.shape_name = 's{i // 2}'")
+        model[i // 2 + 1]["age"] = 10 * i
+        db.cypher(f"merge (p:Person {{'name': 'p{i}'}})-[:KNOWS]->"
+                  f"(q:Person {{'name': 'p{i + 1}'}})")
+    for df in (db.table("shape"), db.nodes, db.edges):
+        assert df.rdd.getNumPartitions() <= cap
+    got = sorted(db.sql("select * from shape"), key=lambda r: r["id"])
+    assert got == [model[i] for i in sorted(model)]
+    assert _graph_rows(db) == (
+        sorted((f"person:p{i}", "Person", f"p{i}", []) for i in range(n + 1)),
+        sorted((f"person:p{i}", f"person:p{i + 1}", "KNOWS") for i in range(n)),
+    )
+
+
+def test_failed_statement_leaves_stores_unchanged(spark):
+    """A statement that raises changes no store: the catalog keeps the
+    very same table frames and the graph keeps its rows."""
+    db = HashDb(spark)
+    db.sql("insert into atom (atom_name, age) values ('a', 1)")
+    db.cypher("merge (p:Person {'name': 'Ann'})-[:KNOWS]->"
+              "(q:Person {'name': 'Bo'})")
+    tables = dict(db.engine.tables)
+    graph = _graph_rows(db)
+    failing = [
+        (db.sql, "insert into atom (atom_name, age) values ('b')", "arity"),
+        (db.sql, "insert into atom (atom_name, age) values ('b', 1.2.3)",
+         "malformed"),
+        (db.sql, "update atom set atom.age = 1.2.3 where atom.atom_name = 'a'",
+         "malformed"),
+        (db.sql, "update atom set atom.age = 2 where atom.~tags[]~name = 'x'",
+         "document-path"),
+        (db.cypher, "merge (p:PERSON {'name': 'Ann'})", "label conflict"),
+        (db.cypher, "merge (p:Person {'age': '3'})-[:KNOWS]->"
+         "(q:Person {'name': 'Cy'})", "name attribute"),
+    ]
+    for run, stmt, why in failing:
+        with pytest.raises(ValueError, match=why):
+            run(stmt)
+    assert db.engine.tables.keys() == tables.keys()
+    assert all(db.engine.tables[t] is df for t, df in tables.items())
+    assert _graph_rows(db) == graph
+    assert db.sql("select * from atom") == [
+        {"age": 1, "atom_name": "a", "id": 1}
+    ]
+
+
 def test_non_string_kv_key_is_rejected(spark):
     """A key that is neither str nor None raises before it reaches the
     pending writes, so it cannot break a later fold."""
