@@ -23,8 +23,10 @@ endpoint→method rename:
 State model: every store has one write path. Driver-held rows (an
 INSERT row, a MERGE delta, pending KV writes) enter the plan through
 local_frame, and each write leaves through capped_checkpoint, which caps
-the partition count and cuts the lineage (localframe.py). SQL INSERT and
-UPDATE and Cypher MERGE do that per statement. The KV table is a
+the partition count and cuts the lineage (localframe.py). An INSERT or
+a MERGE decides on the driver from one small probe (max(id); the stored
+labels and edges of its nodes) and appends only what is new through
+localframe.append, which writes nothing when nothing is. The KV table is a
 checkpointed base plus a bounded driver dict of pending writes (None as a
 tombstone): set/clear touch only the dict, and once it holds
 _CHECKPOINT_EVERY keys one anti-join + union + capped checkpoint folds it
@@ -44,9 +46,8 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
-from hash_db_spark.cypher import CypherCompiler
+from hash_db_spark.cypher.compiler import EDGES_SCHEMA, NODES_SCHEMA, CypherCompiler
 from hash_db_spark.operators import kv as K
 from hash_db_spark.operators.documents import shred_infer
 from hash_db_spark.sql import SqlEngine
@@ -54,8 +55,6 @@ from hash_db_spark.sql import SqlEngine
 from hash_db_spark.localframe import capped_checkpoint, local_frame
 
 _KV_SCHEMA = "pk string, sk string, value string"
-_NODES_SCHEMA = "id string, label string, name string, attrs map<string,string>"
-_EDGES_SCHEMA = "src string, dst string, rel string"
 
 
 # The KV delta folds into the base once it holds this many distinct keys.
@@ -74,8 +73,8 @@ class HashDb:
         self.spark = spark
         self.kv = local_frame(spark, [], _KV_SCHEMA)
         self.engine = SqlEngine(spark, tables or {})
-        self.nodes = local_frame(spark, [], _NODES_SCHEMA)
-        self.edges = local_frame(spark, [], _EDGES_SCHEMA)
+        self.nodes = local_frame(spark, [], NODES_SCHEMA)
+        self.edges = local_frame(spark, [], EDGES_SCHEMA)
         self._docs: dict[str, dict[str, str]] = {}  # collection -> id -> json
 
     # -- KV (K1-K9) ---------------------------------------------------------

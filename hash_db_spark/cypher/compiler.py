@@ -3,7 +3,8 @@
 The reference executes MATCH with per-node numpy adjacency-matrix matmuls
 and candidate-chain intersection on ONE data node
 (/root/reference/client.py:894-1186, placement server.py:1146-1156). Here a
-pattern compiles to a join DAG over two DataFrames:
+pattern compiles to a join DAG over two DataFrames, of NODES_SCHEMA and
+EDGES_SCHEMA:
 
     nodes(id, label, name, attrs map<string,string>)
     edges(src, dst, rel)
@@ -35,7 +36,10 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from hash_db_spark.cypher.parser import CypherParser, Edge, Node
-from hash_db_spark.localframe import capped_checkpoint, local_frame
+from hash_db_spark.localframe import append
+
+NODES_SCHEMA = "id string, label string, name string, attrs map<string,string>"
+EDGES_SCHEMA = "src string, dst string, rel string"
 
 
 class CypherCompiler:
@@ -336,92 +340,72 @@ class CypherCompiler:
 
         Node upsert is find-by-(label, name)-else-create
         (reference: find by attributes else create, client.py:876-891);
-        edge upsert is idempotent append (G2/G3). Implemented as anti-join
-        + union — on Delta-backed storage this is a MERGE INTO.
+        edge upsert is idempotent append (G2/G3). It decides on the
+        driver from two collects and no join: the stored labels of the
+        pattern's node ids, and the stored edges from its source nodes.
+        On Delta-backed storage this is a MERGE INTO.
 
-        Both outputs leave through capped_checkpoint. The checkpoint cuts
-        the lineage: each merge's plan references the previous nodes frame
-        twice (union + anti-join), so chained merges would otherwise grow
-        the logical plan 2^n and OOM the driver during analysis. The cap
-        keeps the layout flat: each union appends the delta's partitions,
-        so without it a graph would gain partitions on every merge and
-        every later MATCH and MERGE would run more tasks. A materialized
-        upsert per batch is also what the Delta path does.
+        The new rows leave through localframe.append: one capped
+        checkpoint per store that gains rows, none otherwise. It cuts the
+        union chain, so a long session keeps a flat plan, and caps the
+        partitions, so later MATCHes and MERGEs run no more tasks.
         """
-        spark = self.nodes.sparkSession
-        # Driver-side first-wins dedupe: a pattern mentioning the same
-        # (label, name) node in several chains (or repeating an edge) must
-        # contribute ONE delta row — the anti-join only filters against
-        # pre-existing frames, and first-occurrence-wins matches the
-        # reference's find-else-create (the second mention finds the first).
-        new_nodes: dict[str, tuple] = {}
-        new_edges: dict[tuple, tuple] = {}
+        # Pattern order: the first mention of a node wins (the reference's
+        # find-else-create: a second mention finds the first).
+        mentions: list[tuple] = []
+        new_edges: dict[tuple, None] = {}  # an ordered set
         for chain in parser.chains:
-            seq: list[Node | Edge] = list(chain)
-            for item in seq:
-                if isinstance(item, Node):
-                    name = item.attributes.get("name")
-                    if name is None:
-                        raise ValueError("merge nodes need a name attribute")
-                    label = item.label or "Node"
-                    attrs = {
-                        k: v for k, v in item.attributes.items() if k != "name"
-                    }
-                    nid = f"{label.lower()}:{name}"
-                    new_nodes.setdefault(nid, (nid, label, name, attrs))
-            for i in range(0, len(seq) - 2, 2):
-                n1, edge, n2 = seq[i], seq[i + 1], seq[i + 2]
-                assert isinstance(edge, Edge)
-                id1 = f"{(n1.label or 'Node').lower()}:{n1.attributes['name']}"
-                id2 = f"{(n2.label or 'Node').lower()}:{n2.attributes['name']}"
-                src, dst = (id1, id2) if edge.direction == "right" else (id2, id1)
-                new_edges.setdefault((src, dst, edge.name), (src, dst, edge.name))
+            ids = []
+            for node in chain[::2]:
+                name = node.attributes.get("name")
+                if name is None:
+                    raise ValueError("merge nodes need a name attribute")
+                label = node.label or "Node"
+                attrs = {k: v for k, v in node.attributes.items() if k != "name"}
+                ids.append(f"{label.lower()}:{name}")
+                mentions.append((ids[-1], label, name, attrs))
+            for i, edge in enumerate(chain[1::2]):
+                src, dst = ids[i], ids[i + 1]
+                if edge.direction != "right":
+                    src, dst = dst, src
+                new_edges[(src, dst, edge.name)] = None
 
-        nodes_delta = local_frame(
-            spark,
-            new_nodes.values(),
-            "id string, label string, name string, attrs map<string,string>",
-        )
-        edges_delta = local_frame(
-            spark, new_edges.values(), "src string, dst string, rel string"
-        )
         # Node identity is lower(label):name (reference id scheme; MATCH
-        # still compares labels case-sensitively). A merge whose id
-        # collides with an existing node of a DIFFERENT label would be
-        # silently anti-joined away and never created — refuse loudly.
-        conflict = (
-            nodes_delta.alias("n")
-            .join(self.nodes.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .select("id", F.col("n.label").alias("new_label"),
-                    F.col("o.label").alias("old_label"))
-            .limit(1)
-            .collect()
+        # still compares labels case-sensitively). An id met with another
+        # label, stored or earlier in the pattern, would be silently
+        # dropped as existing — refuse loudly instead.
+        known = F.col("id").isin([m[0] for m in mentions])
+        labels = dict(self.nodes.select("id", "label").filter(known).collect())
+        new_nodes = []
+        for row in mentions:
+            nid, label = row[:2]
+            if nid not in labels:
+                labels[nid] = label
+                new_nodes.append(row)
+            elif labels[nid] != label:
+                raise ValueError(
+                    f"merge label conflict on node id {nid!r}: existing "
+                    f"label {labels[nid]!r} vs merged {label!r} "
+                    "(node identity is case-insensitive on the label)"
+                )
+        srcs = list({e[0] for e in new_edges})
+        probe = self.edges.select("src", "dst", "rel").filter(F.col("src").isin(srcs))
+        stored = set(map(tuple, probe.collect())) if srcs else set()
+        return (
+            append(self.nodes, new_nodes, NODES_SCHEMA),
+            append(self.edges, [e for e in new_edges if e not in stored],
+                   EDGES_SCHEMA),
         )
-        if conflict:
-            c = conflict[0]
-            raise ValueError(
-                f"merge label conflict on node id {c['id']!r}: existing "
-                f"label {c['old_label']!r} vs merged {c['new_label']!r} "
-                "(node identity is case-insensitive on the label)"
-            )
-        nodes_out = self.nodes.unionByName(
-            nodes_delta.join(self.nodes.select("id"), "id", "left_anti"),
-            allowMissingColumns=True,
-        )
-        edges_out = self.edges.unionByName(
-            edges_delta.join(self.edges, ["src", "dst", "rel"], "left_anti")
-        )
-        return capped_checkpoint(nodes_out), capped_checkpoint(edges_out)
 
     def merge_many(self, statements: list[str]) -> tuple[DataFrame, DataFrame]:
         """Apply a sequence of MERGE statements as ONE batched upsert.
 
         Sequential MERGEs are monotone insert-if-absent (find-else-create,
-        first occurrence's attributes win), so folding all statement deltas
-        driver-side in order and applying a single anti-join + union +
-        checkpoint is result-identical to running them one by one — and one
-        shuffle instead of N (the bulk-ingest shape for scale).
+        first occurrence's attributes win), so folding all statement
+        patterns driver-side in order and deciding them in one merge is
+        result-identical to running them one by one, a label conflict
+        between two statements included. It runs no shuffle at all: one
+        probe and at most one append per store, not one per statement.
         """
         merged = CypherParser()
         merged.kind = "merge"

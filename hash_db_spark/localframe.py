@@ -1,5 +1,6 @@
 """The facade's two ends for driver-held data: rows enter a plan through
-``local_frame`` and every store write leaves through ``capped_checkpoint``.
+``local_frame`` and every store write leaves through ``capped_checkpoint``;
+``append`` joins the two for the INSERT and MERGE writes.
 
 ``spark.createDataFrame(list_of_rows, schema)`` produces a LogicalRDD
 plan: the rows live in a pickled Python RDD, and the FIRST action on
@@ -73,3 +74,13 @@ def capped_checkpoint(df: DataFrame) -> DataFrame:
     most defaultParallelism tasks, not only the persisted layout."""
     cap = df.sparkSession.sparkContext.defaultParallelism
     return df.coalesce(cap).localCheckpoint()
+
+
+def append(store: DataFrame, rows: list, schema) -> DataFrame:
+    """``store`` plus ``rows`` by column name, checkpointed; ``store``
+    itself when there are no rows. The rows are one partition: a
+    LocalRelation scans as one per row, each a task on every later read."""
+    if not rows:
+        return store
+    new = local_frame(store.sparkSession, rows, schema).coalesce(1)
+    return capped_checkpoint(store.unionByName(new, allowMissingColumns=True))

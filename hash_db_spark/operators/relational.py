@@ -90,7 +90,8 @@ def insert_rows(table: DataFrame, new_rows: DataFrame, id_col: str = "id") -> Da
     - novel columns in ``new_rows`` widen the schema (unionByName with
       allowMissingColumns — absent fields become NULL on old rows);
     - ids are max(id) + a deterministic dense rank over the new batch's
-      natural order, not a single counter bottleneck.
+      natural order, not a single counter bottleneck. This is the batch
+      path; the dialect's one-row INSERT takes max(id) + 1 directly.
 
     Id assignment is distributed via the shared rank machinery
     (operators/rank._ranged_with_rn): range partition on the batch's

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from hash_db_spark.catalog import load_table
-from hash_db_spark.cypher import CypherCompiler
+from hash_db_spark.cypher.compiler import EDGES_SCHEMA, NODES_SCHEMA, CypherCompiler
 from hash_db_spark.operators.graph import (
     GRAPH_ORACLE_CTES,
     SQL_TRIANGLE_COUNT,
@@ -137,10 +137,8 @@ def q_cypher_return_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _empty_graph(spark: SparkSession) -> CypherCompiler:
-    nodes = spark.createDataFrame(
-        [], "id string, label string, name string, attrs map<string,string>"
-    )
-    edges = spark.createDataFrame([], "src string, dst string, rel string")
+    nodes = spark.createDataFrame([], NODES_SCHEMA)
+    edges = spark.createDataFrame([], EDGES_SCHEMA)
     return CypherCompiler(nodes, edges)
 
 

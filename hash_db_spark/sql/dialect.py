@@ -26,10 +26,11 @@ incrementally-computable view instead of re-joining on every insert
 efficient" — the streaming materialization in streaming/windows.py is the
 scalable equivalent).
 
-Tables live in a mutable name→DataFrame catalog. INSERT and UPDATE
-write the one way every facade store does: the INSERT row enters through
-local_frame, and the new table leaves through capped_checkpoint before
-it replaces the catalog entry, so a statement that raises changes nothing.
+Tables live in a mutable name→DataFrame catalog. An INSERT reads
+max(id) in one aggregate and appends its row with id max + 1 through
+localframe.append; an UPDATE recomputes the table. Either way the new
+table leaves through capped_checkpoint before it replaces the catalog
+entry, so a statement that raises changes nothing.
 """
 
 from __future__ import annotations
@@ -40,9 +41,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from hash_db_spark.localframe import capped_checkpoint, local_frame
+from hash_db_spark.localframe import append, capped_checkpoint, local_frame
 from hash_db_spark.operators.fts import compile_fts, compile_phrase
-from hash_db_spark.operators.relational import insert_rows, update_where
+# insert_rows is unused here but stays importable: perfbench's tracer
+# patches it by name in this module when it installs.
+from hash_db_spark.operators.relational import insert_rows, update_where  # noqa: F401
 
 _STR = r"'([^']*)'"
 _TYPES = {str: T.StringType(), int: T.LongType(), float: T.DoubleType()}
@@ -221,19 +224,21 @@ class SqlEngine:
         values = self._split_values(values_s)
         if len(fields) != len(values):
             raise ValueError(f"insert arity mismatch: {fields} vs {values}")
-        # Columns in name order and types by literal, as createDataFrame
-        # infers them from a dict row.
-        row = sorted(dict(zip(fields, values)).items())
-        schema = T.StructType([T.StructField(f, _TYPES[type(v)]) for f, v in row])
-        new = local_frame(self.spark, [tuple(v for _, v in row)], schema)
+        cells = dict(zip(fields, values))
+        cells.pop("id", None)  # the engine assigns ids
         base = self.tables.get(table)
-        if base is None:
-            # First insert creates the table (no DDL in the dialect —
-            # emergent schema, README.md:175).
-            out = new.withColumn("id", F.lit(1).cast("long"))
-        else:
-            out = insert_rows(base, new, id_col="id")
-        self.tables[table] = capped_checkpoint(out)
+        # The reference's per-table counter (server.py:757-771), read off
+        # the table, so a table replaced from outside needs no reset.
+        top = 0 if base is None else base.agg(F.max("id")).first()[0] or 0
+        row = [*sorted(cells.items()), ("id", top + 1)]
+        schema = T.StructType([T.StructField(f, _TYPES[type(v)]) for f, v in row])
+        rows = [tuple(v for _, v in row)]
+        # A first insert creates the table (emergent schema, README.md:175)
+        # from its row: an empty frame has no size statistics to broadcast.
+        self.tables[table] = (
+            capped_checkpoint(local_frame(self.spark, rows, schema))
+            if base is None else append(base, rows, schema)
+        )
         return None
 
     def _split_values(self, s: str) -> list:

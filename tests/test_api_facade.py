@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 
 from hash_db_spark.api import HashDb
+from hash_db_spark.cypher import CypherCompiler
 
 
 @pytest.fixture(scope="module")
@@ -253,6 +254,12 @@ def test_failed_statement_leaves_stores_unchanged(spark):
         (db.sql, "update atom set atom.age = 2 where atom.~tags[]~name = 'x'",
          "document-path"),
         (db.cypher, "merge (p:PERSON {'name': 'Ann'})", "label conflict"),
+        (db.cypher, "merge (a:Person {'name': 'X'})-[:R]->"
+         "(b:PERSON {'name': 'X'})", "label conflict"),
+        # a batch raises where its statements one by one would
+        (CypherCompiler(db.nodes, db.edges).merge_many,
+         ["merge (a:Person {'name': 'Y'})", "merge (a:PERSON {'name': 'Y'})"],
+         "label conflict"),
         (db.cypher, "merge (p:Person {'age': '3'})-[:KNOWS]->"
          "(q:Person {'name': 'Cy'})", "name attribute"),
     ]
@@ -327,6 +334,24 @@ def test_facade_spark_jobs_per_verb(spark):
         for desc in (False, True):
             got, jobs = _spark_jobs(spark, lambda: verb(desc))
             assert (got, jobs) == (rows[::-1] if desc else rows, 1)
+
+
+def test_facade_write_jobs(spark):
+    """A dialect INSERT into an existing table runs its max(id) probe
+    and one checkpoint. A MERGE whose nodes and edges all exist runs its
+    two probes and nothing else, and keeps the very same graph frames."""
+    db = HashDb(spark)
+    db.sql("insert into cost (cost_name, age) values ('a', 1)")
+    _, jobs = _spark_jobs(
+        spark, lambda: db.sql("insert into cost (cost_name, age) values ('b', 2)")
+    )
+    assert jobs <= 3
+    assert [r["id"] for r in db.sql("select * from cost")] == [1, 2]
+    stmt = "merge (p:Person {'name': 'Ann'})-[:KNOWS]->(q:Person {'name': 'Bo'})"
+    db.cypher(stmt)
+    nodes, edges = db.nodes, db.edges
+    assert _spark_jobs(spark, lambda: db.cypher(stmt))[1] <= 2
+    assert db.nodes is nodes and db.edges is edges
 
 
 def test_sql_script_multi_statement_session(db):

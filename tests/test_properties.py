@@ -19,6 +19,7 @@ from hypothesis.stateful import (
 )
 
 import pyspark.sql.functions as F
+import pytest
 
 from hash_db_spark.operators import kv as K
 from hash_db_spark.operators.fts import fts_filter
@@ -221,6 +222,153 @@ def test_hashdb_kv_matches_dict_model(spark, monkeypatch):
     monkeypatch.setattr(HashDbKvMachine, "spark", spark)
     run_state_machine_as_test(
         HashDbKvMachine, settings=settings(**SETTINGS, stateful_step_count=50)
+    )
+
+
+# Two tables and three typed columns, so inserts land in existing tables
+# and widen them; values mix ASCII, non-ASCII and astral characters. The
+# nodes share two names across Person, PERSON and Post: Person and PERSON
+# map to one node id, which a MERGE must refuse.
+write_tables = st.sampled_from(["folks", "gear"])
+write_texts = st.text(alphabet="aZ é😀,", max_size=4)
+write_cells = st.fixed_dictionaries(
+    {}, optional={"name": write_texts, "age": st.integers(0, 99),
+                  "city": write_texts},
+).filter(bool)
+merge_nodes = st.tuples(
+    st.sampled_from(["Person", "PERSON", "Post"]),
+    st.sampled_from(["Ann", "Bø"]),
+    st.sampled_from([{}, {"age": "1"}, {"age": "2"}]),
+)
+merge_edges = st.tuples(st.sampled_from(["KNOWS", "LIKES"]), st.booleans())
+
+
+def _sql_lit(v) -> str:
+    return f"'{v}'" if isinstance(v, str) else str(v)
+
+
+class WriteModel:
+    """Plain-Python model of the facade's write verbs: tables of row
+    dicts with ids from a per-table counter, and the graph as
+    id -> (label, name, attrs) plus a set of (src, dst, rel) edges."""
+
+    def __init__(self):
+        self.tables: dict[str, list[dict]] = {}
+        self.nodes: dict[str, tuple] = {}
+        self.edges: set[tuple[str, str, str]] = set()
+
+    def insert(self, table: str, cells: dict) -> None:
+        rows = self.tables.setdefault(table, [])
+        rows.append({**cells, "id": len(rows) + 1})
+
+    def update(self, table: str, col: str, value, where: tuple) -> None:
+        key, want = where
+        for row in self.tables[table]:  # the column exists even if no row matches
+            row[col] = value if row.get(key) == want else row.get(col)
+
+    def select_all(self, table: str) -> list[dict]:
+        cols = {c for row in self.tables[table] for c in row}
+        return [{c: row.get(c) for c in cols} for row in self.tables[table]]
+
+    def merge(self, chain: list) -> bool:
+        """Apply one MERGE chain [node, (rel, right), node, ...]; False,
+        with nothing changed, on a label conflict."""
+        nodes = dict(self.nodes)
+        ids = []
+        for label, name, attrs in chain[::2]:
+            nid = f"{label.lower()}:{name}"
+            if nid in nodes and nodes[nid][0] != label:
+                return False
+            nodes.setdefault(nid, (label, name, attrs))
+            ids.append(nid)
+        for i, (rel, right) in enumerate(chain[1::2]):
+            src, dst = ids[i], ids[i + 1]
+            self.edges.add((src, dst, rel) if right else (dst, src, rel))
+        self.nodes = nodes
+        return True
+
+
+class HashDbWriteMachine(RuleBasedStateMachine):
+    """Dialect INSERT and UPDATE and Cypher MERGE through one HashDb
+    against WriteModel. Each rule compares the store it wrote; teardown
+    compares every store."""
+
+    spark = None  # set by the test before the run
+
+    def __init__(self):
+        super().__init__()
+        from hash_db_spark.api import HashDb
+
+        self.db = HashDb(self.spark)
+        self.model = WriteModel()
+
+    def check_table(self, table: str) -> None:
+        got = sorted(self.db.sql(f"select * from {table}"), key=lambda r: r["id"])
+        assert got == self.model.select_all(table)
+
+    def check_graph(self) -> None:
+        got = sorted(
+            (r.id, r.label, r.name, sorted(r.attrs.items()))
+            for r in self.db.nodes.collect()
+        )
+        want = sorted(
+            (i, label, name, sorted(attrs.items()))
+            for i, (label, name, attrs) in self.model.nodes.items()
+        )
+        assert got == want
+        edges = [tuple(r) for r in self.db.edges.collect()]
+        assert sorted(edges) == sorted(self.model.edges)
+
+    @rule(table=write_tables, cells=write_cells)
+    def insert(self, table, cells):
+        cols = ", ".join(cells)
+        vals = ", ".join(_sql_lit(v) for v in cells.values())
+        self.db.sql(f"insert into {table} ({cols}) values ({vals})")
+        self.model.insert(table, cells)
+        self.check_table(table)
+
+    @rule(table=write_tables, col=st.sampled_from(["age", "city"]),
+          value=st.integers(0, 99), text=write_texts,
+          row=st.integers(1, 4))
+    def update(self, table, col, value, text, row):
+        if table not in self.model.tables:
+            return
+        value = value if col == "age" else text
+        self.db.sql(f"update {table} set {table}.{col} = {_sql_lit(value)} "
+                    f"where {table}.id = {row}")
+        self.model.update(table, col, value, ("id", row))
+        self.check_table(table)
+
+    @rule(first=merge_nodes,
+          rest=st.lists(st.tuples(merge_edges, merge_nodes), max_size=2))
+    def merge(self, first, rest):
+        chain = [first] + [x for pair in rest for x in pair]
+        text = "merge "
+        for i, item in enumerate(chain):
+            if i % 2 == 0:
+                label, name, attrs = item
+                props = {"name": name, **attrs}.items()
+                text += f"(:{label} {{{', '.join(f'{k}: {v!r}' for k, v in props)}}})"
+            else:
+                rel, right = item
+                text += f"-[:{rel}]->" if right else f"<-[:{rel}]-"
+        if self.model.merge(chain):
+            self.db.cypher(text)
+        else:
+            with pytest.raises(ValueError, match="label conflict"):
+                self.db.cypher(text)
+        self.check_graph()
+
+    def teardown(self):
+        for table in self.model.tables:
+            self.check_table(table)
+        self.check_graph()
+
+
+def test_hashdb_writes_match_model(spark, monkeypatch):
+    monkeypatch.setattr(HashDbWriteMachine, "spark", spark)
+    run_state_machine_as_test(
+        HashDbWriteMachine, settings=settings(**SETTINGS, stateful_step_count=12)
     )
 
 
