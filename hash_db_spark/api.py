@@ -22,8 +22,11 @@ endpoint→method rename:
 
 State model: every store has one write path. Driver-held rows (an
 INSERT row, a MERGE delta, pending KV writes) enter the plan through
-local_frame, and each write leaves through capped_checkpoint, which caps
-the partition count and cuts the lineage (localframe.py). An INSERT or
+local_frame, and each write leaves through capped_checkpoint, which fits
+the partition count to the store's size estimate and cuts the lineage
+(localframe.py). A store starts as an empty LocalRelation, so that
+estimate is true from the first write on: a KB-sized store is one
+partition and joins on it broadcast. An INSERT or
 a MERGE decides on the driver from one small probe (max(id); the stored
 labels and edges of its nodes) and appends only what is new through
 localframe.append, which writes nothing when nothing is. The KV table is a
@@ -38,7 +41,8 @@ Documents are stored as raw JSON per collection and
 registered with the SQL engine as a schema-inferred nested view, so the
 reference's `select people.~hobbies[]~name from people` path queries run
 unchanged (server.py:320-328 co-inserts shredded leaves for the same
-reason).
+reason). The schema is inferred on the JVM, with no Python worker, and
+a save that is not a JSON object is refused before it touches either.
 """
 
 from __future__ import annotations
@@ -221,18 +225,24 @@ class HashDb:
     def save(self, collection: str, doc_id: str, obj) -> None:
         """Store a JSON document AND register the collection as a nested
         SQL view so `~path[]~leaf` dialect queries work (the reference
-        shreds + co-inserts for the same effect, server.py:289-331)."""
-        self._docs.setdefault(collection, {})[str(doc_id)] = json.dumps(obj)
+        shreds + co-inserts for the same effect, server.py:289-331).
+        ``obj`` must be a JSON object: any other document would infer
+        as Spark's ``_corrupt_record`` column in the view. Nothing
+        changes unless the view builds."""
+        if not isinstance(obj, dict):
+            raise ValueError(
+                f"a document is a JSON object, got {type(obj).__name__}"
+            )
+        docs = {**self._docs.get(collection, {}), str(doc_id): json.dumps(obj)}
         raw = local_frame(
-            self.spark,
-            [(i, j) for i, j in self._docs[collection].items()],
-            "doc_id string, json string",
+            self.spark, list(docs.items()), "doc_id string, json string"
         )
         # shred_infer types the JSON column; lifting its fields to top
         # level gives the flat-table-with-nested-columns shape the
         # dialect's `t.~path[]~leaf` compiler navigates.
         nested = shred_infer(raw, "json")
         self.engine.tables[collection] = nested.select("doc_id", "json.*")
+        self._docs[collection] = docs
 
     def document(self, collection: str, doc_id: str):
         raw = self._docs.get(collection, {}).get(str(doc_id))

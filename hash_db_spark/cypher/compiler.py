@@ -26,8 +26,13 @@ labels (example.py's Post 'Samuel' collides with Person 'Samuel'); we keep
 labels distinct and document the divergence.
 
 Scale: node/edge tables partition like any DataFrame; label+attribute
-filters push into the scan, AQE broadcasts small frontiers. No single-node
-graph placement.
+filters push into the scan. The facade's stores start as empty
+LocalRelations and keep a true size estimate through every checkpoint
+(localframe.py), so Catalyst plans the joins of a small graph as
+broadcast joins up front, shipping the small side to the other as GraphX
+ships vertices to edges, where an unknown size would plan sort-merge
+joins for AQE to re-plan after their shuffles. No single-node graph
+placement.
 """
 
 from __future__ import annotations

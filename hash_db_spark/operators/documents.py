@@ -41,11 +41,20 @@ def infer_schema(df: DataFrame, json_col: str, sample: int = 1024):
     keys, widened types), exactly the registry the reference accumulates.
 
     The sample is bounded (default 1024 docs) so inference stays O(sample)
-    at any corpus size; pass a larger sample for long-tail keys."""
+    at any corpus size; pass a larger sample for long-tail keys.
+
+    The sample goes to the JVM reader as a ``Dataset[String]``, so the
+    inference job runs without a Python worker: a Python RDD of the
+    strings would pickle each row through one (PySpark's ``read.json``
+    takes no DataFrame)."""
+    spark = df.sparkSession
     strings = (
         df.select(json_col).where(F.col(json_col).isNotNull()).limit(sample)
     )
-    return df.sparkSession.read.json(strings.rdd.map(lambda r: r[0])).schema
+    dataset = getattr(strings._jdf, "as")(
+        spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    )
+    return DataFrame(spark.read._jreader.json(dataset), spark).schema
 
 
 def shred_infer(df: DataFrame, json_col: str, sample: int = 1024) -> DataFrame:

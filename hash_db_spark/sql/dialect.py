@@ -234,11 +234,10 @@ class SqlEngine:
         schema = T.StructType([T.StructField(f, _TYPES[type(v)]) for f, v in row])
         rows = [tuple(v for _, v in row)]
         # A first insert creates the table (emergent schema, README.md:175)
-        # from its row: an empty frame has no size statistics to broadcast.
-        self.tables[table] = (
-            capped_checkpoint(local_frame(self.spark, rows, schema))
-            if base is None else append(base, rows, schema)
-        )
+        # by appending its row to an empty table of the row's schema.
+        if base is None:
+            base = local_frame(self.spark, [], schema)
+        self.tables[table] = append(base, rows, schema)
         return None
 
     def _split_values(self, s: str) -> list:

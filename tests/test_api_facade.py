@@ -243,6 +243,7 @@ def test_failed_statement_leaves_stores_unchanged(spark):
     db.sql("insert into atom (atom_name, age) values ('a', 1)")
     db.cypher("merge (p:Person {'name': 'Ann'})-[:KNOWS]->"
               "(q:Person {'name': 'Bo'})")
+    db.save("atom_docs", "1", {"name": "Ann"})
     tables = dict(db.engine.tables)
     graph = _graph_rows(db)
     failing = [
@@ -262,6 +263,9 @@ def test_failed_statement_leaves_stores_unchanged(spark):
          "label conflict"),
         (db.cypher, "merge (p:Person {'age': '3'})-[:KNOWS]->"
          "(q:Person {'name': 'Cy'})", "name attribute"),
+        # a document that is not a JSON object would add Spark's
+        # _corrupt_record column to the collection's view
+        (lambda doc: db.save("atom_docs", "2", doc), [1, 2], "JSON object"),
     ]
     for run, stmt, why in failing:
         with pytest.raises(ValueError, match=why):
@@ -272,6 +276,8 @@ def test_failed_statement_leaves_stores_unchanged(spark):
     assert db.sql("select * from atom") == [
         {"age": 1, "atom_name": "a", "id": 1}
     ]
+    assert db.sql("select * from atom_docs") == [{"doc_id": "1", "name": "Ann"}]
+    assert db.document("atom_docs", "2") is None
 
 
 def test_non_string_kv_key_is_rejected(spark):
@@ -338,20 +344,102 @@ def test_facade_spark_jobs_per_verb(spark):
 
 def test_facade_write_jobs(spark):
     """A dialect INSERT into an existing table runs its max(id) probe
-    and one checkpoint. A MERGE whose nodes and edges all exist runs its
+    and one checkpoint: two jobs. A MERGE whose nodes and edges all exist runs its
     two probes and nothing else, and keeps the very same graph frames."""
     db = HashDb(spark)
     db.sql("insert into cost (cost_name, age) values ('a', 1)")
     _, jobs = _spark_jobs(
         spark, lambda: db.sql("insert into cost (cost_name, age) values ('b', 2)")
     )
-    assert jobs <= 3
+    assert jobs <= 2
     assert [r["id"] for r in db.sql("select * from cost")] == [1, 2]
     stmt = "merge (p:Person {'name': 'Ann'})-[:KNOWS]->(q:Person {'name': 'Bo'})"
     db.cypher(stmt)
     nodes, edges = db.nodes, db.edges
     assert _spark_jobs(spark, lambda: db.cypher(stmt))[1] <= 2
     assert db.nodes is nodes and db.edges is edges
+
+
+def _shape(df):
+    """A frame's size estimate in bytes and its partition count."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size), df.rdd.getNumPartitions()
+
+
+def test_stores_report_their_real_size(spark, monkeypatch):
+    """A fresh store is an empty LocalRelation: no partitions and a
+    finite size estimate (a frame over an RDD reports Long.MaxValue
+    bytes, and every checkpoint of a store carries it forward). Written
+    stores keep a true estimate, and capped_checkpoint fits a KB-sized
+    store into one partition; a frame larger than the advisory
+    partition size keeps more than one."""
+    from hash_db_spark import api
+    from hash_db_spark.localframe import capped_checkpoint, local_frame
+
+    unknown = 2**63 - 1
+    db = HashDb(spark)
+    for df in (db.kv, db.nodes, db.edges):
+        size, parts = _shape(df)
+        assert parts == 0 and size < unknown
+    monkeypatch.setattr(api, "_CHECKPOINT_EVERY", 4)
+    for i in range(4):
+        db.set("user#a", f"m#{i}", f"v{i}")
+    assert not db._kv_delta  # the fourth set folded the delta
+    for i in range(3):
+        db.sql(f"insert into sized (sized_name, age) values ('s{i}', {i})")
+        db.cypher(f"merge (p:Person {{'name': 'p{i}'}})-[:KNOWS]->"
+                  f"(q:Person {{'name': 'p{i + 1}'}})")
+    for df in (db.kv, db.nodes, db.edges, db.table("sized")):
+        size, parts = _shape(df)
+        assert size < 2**20 and parts == 1
+
+    rows = [(i, f"row-{i}") for i in range(64)]
+    frame = local_frame(spark, rows, "id long, name string")
+    assert _shape(capped_checkpoint(frame))[1] == 1
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64b")
+    try:
+        assert _shape(capped_checkpoint(frame))[1] > 1
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_facade_read_jobs(spark):
+    """Stores that know their size plan small: a MATCH's joins
+    broadcast, so each MATCH shape runs at most 4 jobs, and a KB-sized
+    table is one partition, so a group by or a select distinct runs
+    without an exchange, in one job."""
+    db = HashDb(spark)
+    for i in range(6):
+        db.sql(f"insert into rj (rj_name, age) values ('r{i}', {20 + i % 3})")
+    for chain in ("ABC", "CDE", "EFA", "BGH"):
+        db.cypher("merge " + "-[:FRIENDS]->".join(
+            f"(n{i}:Person {{'name': '{c}'}})" for i, c in enumerate(chain)))
+    db.cypher("merge (a:Person {'name': 'A'})-[:FOLLOWS]->"
+              "(h:Person {'name': 'H'})")
+    p = lambda name: f"person:{name}"  # noqa: E731
+    matches = [
+        ("match (p:Person {'name': 'A'})-[:FRIENDS]->(f:Person)"
+         "-[:FRIENDS]->(g:Person) return f, g", ("f", "g"),
+         [(p("B"), p("C")), (p("B"), p("G"))]),
+        ("match (a:Person {'name': 'A'})-[:FRIENDS*1..3]->(b:Person) "
+         "return a, b", ("a", "b"), [(p("A"), p(b)) for b in "BCDGH"]),
+        ("match (p:Person) optional match (p)-[:FOLLOWS]->(q:Person) "
+         "return p, q", ("p", "q"),
+         [(p(n), p("H") if n == "A" else None) for n in "ABCDEFGH"]),
+    ]
+    for stmt, cols, want in matches:
+        got, jobs = _spark_jobs(spark, lambda: db.cypher(stmt))
+        assert sorted(tuple(r[c] for c in cols) for r in got) == want
+        assert jobs <= 4, stmt
+    got, jobs = _spark_jobs(
+        spark, lambda: db.sql("select rj.age, count(*) from rj group by rj.age"))
+    assert (sorted((r["age"], r["cnt"]) for r in got), jobs) == (
+        [(20, 2), (21, 2), (22, 2)], 1)
+    got, jobs = _spark_jobs(
+        spark, lambda: db.sql("select distinct rj.age from rj"))
+    assert (sorted(r["age"] for r in got), jobs) == ([20, 21, 22], 1)
 
 
 def test_sql_script_multi_statement_session(db):

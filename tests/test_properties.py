@@ -5,7 +5,8 @@ Spark round-trips are bounded with small example counts; determinism
 
 from __future__ import annotations
 
-from collections import Counter
+import json
+from collections import Counter, defaultdict
 
 from hypothesis import given, settings, strategies as st, HealthCheck
 from hypothesis.stateful import (
@@ -14,6 +15,7 @@ from hypothesis.stateful import (
     initialize,
     invariant,
     multiple,
+    precondition,
     rule,
     run_state_machine_as_test,
 )
@@ -369,6 +371,322 @@ def test_hashdb_writes_match_model(spark, monkeypatch):
     monkeypatch.setattr(HashDbWriteMachine, "spark", spark)
     run_state_machine_as_test(
         HashDbWriteMachine, settings=settings(**SETTINGS, stateful_step_count=12)
+    )
+
+
+# JSON documents for schema inference: nested objects, arrays of structs,
+# int/float/string/bool conflicts on one key, nulls and missing keys, and
+# non-ASCII keys and values.
+json_keys = st.sampled_from(["a", "b", "nom", "città", "年齢"])
+json_leaves = st.one_of(
+    st.none(), st.booleans(), st.integers(-10**6, 10**6),
+    st.floats(-1e6, 1e6, allow_nan=False), st.text("aé年😀 ", max_size=4),
+)
+json_values = st.recursive(
+    json_leaves,
+    lambda inner: st.one_of(
+        st.lists(inner, max_size=3),
+        st.dictionaries(json_keys, inner, max_size=3),
+        st.lists(st.dictionaries(json_keys, inner, max_size=3), max_size=3),
+    ),
+    max_leaves=8,
+)
+json_docs = st.lists(
+    st.dictionaries(json_keys, json_values, max_size=4), min_size=1, max_size=6
+)
+
+
+@settings(**SETTINGS)
+@given(docs=json_docs, sample=st.integers(1, 4))
+def test_infer_schema_matches_python_rdd_inference(spark, docs, sample):
+    """infer_schema reads the JSON on the JVM; its schema equals what
+    ``read.json`` infers from a Python RDD of the same strings, and
+    ``sample`` bounds the documents it reads: with one distinct key per
+    document, the schema holds min(sample, documents) fields."""
+    from hash_db_spark.localframe import local_frame
+    from hash_db_spark.operators.documents import infer_schema
+
+    strings = [json.dumps(d, ensure_ascii=False) for d in docs]
+    frame = local_frame(spark, [(x,) for x in strings], "json string")
+    oracle = spark.read.json(spark.sparkContext.parallelize(strings)).schema
+    assert infer_schema(frame, "json") == oracle
+
+    keyed = local_frame(
+        spark, [(json.dumps({f"k{i}": i}),) for i in range(len(docs))],
+        "json string",
+    )
+    fields = infer_schema(keyed, "json", sample=sample).fields
+    assert len(fields) == min(sample, len(docs))
+
+
+# The session model of the benchmark's example_session workload, carried
+# here so tier-1 checks the same answers: tables of row dicts with ids
+# from a per-table counter, the graph's edges and Person ids, and the
+# documents by id.
+def _canon(rows) -> list:
+    """Order-insensitive form of a list of row dicts (nested values
+    serialised so dicts and lists compare by content)."""
+    return sorted(json.dumps(r, sort_keys=True, default=str) for r in rows)
+
+
+class SessionModel:
+    def __init__(self):
+        self.tables: dict[str, list[dict]] = defaultdict(list)
+        self.edges: set[tuple[str, str, str]] = set()
+        self.persons: set[str] = set()
+        self.docs: dict[str, dict] = {}
+
+    def insert(self, table: str, row: dict) -> None:
+        rows = self.tables[table]
+        rows.append({**row, "id": len(rows) + 1})
+
+    def succ(self, node: str, rel: str) -> set[str]:
+        return {d for s, d, r in self.edges if s == node and r == rel}
+
+
+# Few names, so MERGE chains share nodes and a pattern has several paths
+# to one pair; lowercase ASCII search words, since the FTS tokenizer is
+# the subject of test_fts_matches_model. Documents change their inferred
+# schema as they arrive: age is an int, a float, a string or null; the
+# nested address and the non-ASCII key come and go; hobby levels mix
+# ints and floats.
+session_names = st.sampled_from(["Ada", "Bo", "Cy", "Dé"])
+session_chains = st.tuples(
+    st.permutations(["Ada", "Bo", "Cy", "Dé"]), st.integers(2, 3)
+).map(lambda t: t[0][:t[1]])
+session_word = st.sampled_from(["spark", "join", "row", "fast"])
+session_words = st.lists(session_word, min_size=1, max_size=4).map(" ".join)
+session_hobbies = ("chess", "music", "films")
+session_docs = st.fixed_dictionaries(
+    {"name": session_names,
+     "hobbies": st.lists(st.fixed_dictionaries(
+         {"name": st.sampled_from(session_hobbies)},
+         optional={"level": st.integers(0, 9) | st.floats(0, 9)},
+     ), min_size=1, max_size=3)},
+    optional={
+        "age": st.none() | st.integers(18, 70) | st.floats(18, 70)
+        | st.sampled_from(["18", "vingt"]),
+        "address": st.fixed_dictionaries(
+            {"city": st.sampled_from(["Oslo", "Zürich"])},
+            optional={"zip": st.integers(0, 99)}),
+        "città": st.sampled_from(["Roma", "東京"]),
+    },
+)
+
+
+class HashDbReadMachine(RuleBasedStateMachine):
+    """The facade's read verbs against SessionModel, over state that
+    the write verbs build as the run goes: dialect SELECT (where, FTS,
+    join, group by, order by + limit, distinct), the three MATCH shapes
+    of the benchmark, and documents (save, document, path selects, and
+    the view's columns as the inferred schema changes). Each read is
+    compared with the model when it runs."""
+
+    spark = None  # set by the test before the run
+
+    def __init__(self):
+        super().__init__()
+        from hash_db_spark.api import HashDb
+
+        self.db = HashDb(self.spark)
+        self.model = SessionModel()
+        self.n = 0
+
+    def check(self, stmt: str, want: list[dict]) -> None:
+        assert _canon(self.db.sql(stmt)) == _canon(want), stmt
+
+    # -- writes -----------------------------------------------------------
+
+    @initialize(people=st.lists(st.tuples(session_names, st.integers(18, 22)),
+                                min_size=3, max_size=4),
+                items=st.lists(session_words, min_size=3, max_size=4),
+                chains=st.lists(session_chains, min_size=3, max_size=4),
+                doc=session_docs)
+    def seed(self, people, items, chains, doc):
+        """Rows in each table, a document, and a FRIENDS graph that
+        often has two paths between a pair of nodes."""
+        for i, (name, age) in enumerate(people):
+            self.insert_people(name, age)
+            self.insert_item(items[i % len(items)], i + 1, i % 2 + 1)
+        self.insert_product(people[0][0], 5)
+        for chain in chains:
+            self.merge(chain, "FRIENDS")
+        self.save(0, doc)
+
+    @rule(name=session_names, age=st.integers(18, 22))
+    def insert_people(self, name, age):
+        self.n += 1
+        row = {"people_name": f"{name}-{self.n}", "age": age}
+        self.db.sql("insert into people (people_name, age) values "
+                    f"('{row['people_name']}', {age})")
+        self.model.insert("people", row)
+
+    @rule(name=session_names, price=st.integers(5, 9))
+    def insert_product(self, name, price):
+        self.db.sql("insert into products (name, price) values "
+                    f"('{name}', {price})")
+        self.model.insert("products", {"name": name, "price": price})
+
+    @rule(words=session_words, people=st.integers(1, 4),
+          product=st.integers(1, 3))
+    def insert_item(self, words, people, product):
+        self.db.sql("insert into items (search, people, product) values "
+                    f"('{words}', {people}, {product})")
+        self.model.insert("items", {"search": words, "people": people,
+                                    "product": product})
+
+    @rule(chain=session_chains,
+          rel=st.sampled_from(["FRIENDS", "FRIENDS", "FOLLOWS"]))
+    def merge(self, chain, rel):
+        self.db.cypher("merge " + f"-[:{rel}]->".join(
+            f"(n{i}:Person {{'name': '{c}'}})" for i, c in enumerate(chain)))
+        ids = [f"person:{c}" for c in chain]
+        self.model.persons |= set(ids)
+        self.model.edges |= {(a, b, rel) for a, b in zip(ids, ids[1:])}
+
+    @rule(doc_id=st.integers(0, 3), doc=session_docs)
+    def save(self, doc_id, doc):
+        self.db.save("pdocs", str(doc_id), doc)
+        self.model.docs[str(doc_id)] = doc
+
+    # -- SQL reads --------------------------------------------------------
+
+    @rule(age=st.integers(17, 23), cmp=st.booleans())
+    def select_where(self, age, cmp):
+        rows = self.model.tables["people"]
+        if cmp:
+            self.check("select people.people_name, people.age from people "
+                       f"where people.age > {age}",
+                       [{"people_name": r["people_name"], "age": r["age"]}
+                        for r in rows if r["age"] > age])
+        else:
+            self.check(f"select * from people where people.age = {age}",
+                       [r for r in rows if r["age"] == age])
+
+    @rule(a=session_word, b=session_word,
+          mode=st.sampled_from(["|", "&", "phrase"]))
+    def fts(self, a, b, mode):
+        if mode == "|":
+            q, ok = f"{a} | {b}", lambda ws: a in ws or b in ws
+        elif mode == "&":
+            q, ok = f"{a} & {b}", lambda ws: a in ws and b in ws
+        else:
+            q = f'"{a} {b}"'
+            ok = lambda ws: any(ws[i:i + 2] == [a, b]  # noqa: E731
+                                for i in range(len(ws) - 1))
+        self.check(f"select * from items where items.search ~ '{q}'",
+                   [r for r in self.model.tables["items"]
+                    if ok(r["search"].split(" "))])
+
+    @rule()
+    def join(self):
+        people = {p["id"]: p for p in self.model.tables["people"]}
+        prods = {p["id"]: p for p in self.model.tables["products"]}
+        self.check(
+            "select people.people_name, items.search, products.price "
+            "from items inner join people on items.people = people.id "
+            "inner join products on items.product = products.id",
+            [{"people_name": people[i["people"]]["people_name"],
+              "search": i["search"], "price": prods[i["product"]]["price"]}
+             for i in self.model.tables["items"]
+             if i["people"] in people and i["product"] in prods])
+
+    @rule()
+    def group_by(self):
+        counts = Counter(r["age"] for r in self.model.tables["people"])
+        self.check("select people.age, count(*) from people group by people.age",
+                   [{"age": a, "cnt": c} for a, c in counts.items()])
+
+    @rule(k=st.integers(1, 4))
+    def order_limit(self, k):
+        top = sorted(self.model.tables["people"],
+                     key=lambda r: (-r["age"], r["people_name"]))
+        got = self.db.sql("select people.people_name, people.age from people "
+                          f"order by people.age desc, people.people_name "
+                          f"limit {k}")
+        assert got == [{"people_name": r["people_name"], "age": r["age"]}
+                       for r in top[:k]]
+
+    @rule()
+    def distinct(self):
+        self.check("select distinct items.people from items",
+                   [{"people": p} for p in
+                    {r["people"] for r in self.model.tables["items"]}])
+
+    # -- MATCH ------------------------------------------------------------
+
+    @rule(name=session_names,
+          mode=st.sampled_from(["chain", "var", "optional"]))
+    def match(self, name, mode):
+        """The benchmark's three MATCH shapes. The chain also runs from
+        every node, returning its two ends, which two paths can join: a
+        MATCH returns each row once."""
+        m, start = self.model, f"person:{name}"
+        if mode == "chain":
+            chain = "-[:FRIENDS]->(f:Person)-[:FRIENDS]->(g:Person) return "
+            self.check_match(
+                f"match (p:Person {{'name': '{name}'}})" + chain + "f, g",
+                ("f", "g"), {(f, g) for f in m.succ(start, "FRIENDS")
+                             for g in m.succ(f, "FRIENDS")})
+            self.check_match(
+                "match (p:Person)" + chain + "p, g", ("p", "g"),
+                {(p, g) for p in m.persons for f in m.succ(p, "FRIENDS")
+                 for g in m.succ(f, "FRIENDS")})
+        elif mode == "var":
+            reach, frontier = set(), {start}
+            for _ in range(3):
+                frontier = {d for s in frontier for d in m.succ(s, "FRIENDS")}
+                reach |= frontier
+            self.check_match(f"match (a:Person {{'name': '{name}'}})"
+                             "-[:FRIENDS*1..3]->(b:Person) return a, b",
+                             ("a", "b"), {(start, b) for b in reach})
+        else:
+            self.check_match("match (p:Person) optional match "
+                             "(p)-[:FOLLOWS]->(q:Person) return p, q",
+                             ("p", "q"),
+                             {(p, q) for p in m.persons
+                              for q in (m.succ(p, "FOLLOWS") or {None})})
+
+    def check_match(self, stmt: str, cols: tuple, want: set) -> None:
+        got = [tuple(r[c] for c in cols) for r in self.db.cypher(stmt)]
+        key = lambda t: tuple(x or "" for x in t)  # noqa: E731
+        assert sorted(got, key=key) == sorted(want, key=key), stmt
+
+    # -- documents --------------------------------------------------------
+
+    @rule(doc_id=st.integers(0, 4))
+    def document(self, doc_id):
+        got = self.db.document("pdocs", str(doc_id))
+        assert got == self.model.docs.get(str(doc_id))
+
+    @rule(hobby=st.sampled_from(session_hobbies))
+    def doc_where(self, hobby):
+        got = self.db.sql(
+            f"select * from pdocs where pdocs.~hobbies[]~name = '{hobby}'")
+        assert Counter(r["doc_id"] for r in got) == Counter(
+            i for i, d in self.model.docs.items()
+            for h in d["hobbies"] if h["name"] == hobby)
+
+    @rule()
+    def doc_leaves(self):
+        self.check("select pdocs.doc_id, pdocs.~hobbies[]~name from pdocs",
+                   [{"doc_id": i, "name": h["name"]}
+                    for i, d in self.model.docs.items() for h in d["hobbies"]])
+
+    @rule()
+    def doc_view(self):
+        """The view's columns follow every saved document's keys."""
+        got = self.db.sql("select * from pdocs")
+        keys = {k for d in self.model.docs.values() for k in d}
+        assert all(r.keys() == {"doc_id", *keys} for r in got)
+        assert sorted((r["doc_id"], r["name"]) for r in got) == sorted(
+            (i, d["name"]) for i, d in self.model.docs.items())
+
+
+def test_hashdb_reads_match_session_model(spark, monkeypatch):
+    monkeypatch.setattr(HashDbReadMachine, "spark", spark)
+    run_state_machine_as_test(
+        HashDbReadMachine, settings=settings(**SETTINGS, stateful_step_count=20)
     )
 
 

@@ -47,9 +47,9 @@ def test_local_frame_empty_and_dict_rows(spark):
 
 
 def test_local_frame_empty_has_no_partitions(spark):
-    """An empty frame is built over an empty RDD: zero partitions, so a
-    read of a fresh facade store or of a node-only MERGE's edge delta
-    schedules no tasks, and it still carries the given schema."""
+    """An empty frame is an empty JVM LocalRelation: zero partitions, so
+    a read of a fresh facade store schedules no tasks, and it still
+    carries the given schema."""
     schema = "id string, attrs map<string,string>"
     empty = local_frame(spark, [], schema)
     assert empty.rdd.getNumPartitions() == 0
