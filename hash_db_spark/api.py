@@ -237,10 +237,12 @@ class HashDb:
         raw = local_frame(
             self.spark, list(docs.items()), "doc_id string, json string"
         )
-        # shred_infer types the JSON column; lifting its fields to top
-        # level gives the flat-table-with-nested-columns shape the
-        # dialect's `t.~path[]~leaf` compiler navigates.
-        nested = shred_infer(raw, "json")
+        # shred_infer types the JSON column from every document the
+        # collection holds, so a key that first appears late still
+        # reaches the view; lifting its fields to top level gives the
+        # flat-table-with-nested-columns shape the dialect's
+        # `t.~path[]~leaf` compiler navigates.
+        nested = shred_infer(raw, "json", sample=len(docs))
         self.engine.tables[collection] = nested.select("doc_id", "json.*")
         self._docs[collection] = docs
 

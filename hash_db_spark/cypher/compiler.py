@@ -1,10 +1,10 @@
-"""Cypher → DataFrame compiler (SURVEY §2.4 G2-G7).
+"""Cypher → Spark SQL compiler (SURVEY §2.4 G2-G7).
 
 The reference executes MATCH with per-node numpy adjacency-matrix matmuls
 and candidate-chain intersection on ONE data node
 (/root/reference/client.py:894-1186, placement server.py:1146-1156). Here a
-pattern compiles to a join DAG over two DataFrames, of NODES_SCHEMA and
-EDGES_SCHEMA:
+pattern compiles to ONE SQL statement over two DataFrames, of NODES_SCHEMA
+and EDGES_SCHEMA:
 
     nodes(id, label, name, attrs map<string,string>)
     edges(src, dst, rel)
@@ -20,13 +20,27 @@ EDGES_SCHEMA:
   intersection (client.py:978-1082) — G6;
 - RETURN projects the bound node-id columns — G7.
 
+The statement is a WITH list of small named tables (each variable's
+candidates, each edge pattern's pairs) and one SELECT over their joins,
+run as ``spark.sql(text, args=params, nodes=..., edges=...)``. One call
+analyses the plan once, where building the same joins through DataFrame
+calls analyses the growing plan again at each of about 30 calls, 34-72
+ms per MATCH before any job runs. Every label, relationship
+name, attribute key and value is a named parameter (``:p0``, ...), so a
+value is data, never SQL: a name holding a quote, a brace or ``--``
+matches itself and cannot change the statement. Variable names become
+backquoted identifiers; the store DataFrames enter as ``{nodes}`` and
+``{edges}``, which spark.sql formats to temporary views for the call.
+
 Node identity is (label, name) — the reference finds nodes by attributes
 alone (client.py:876-891), which silently merges same-named nodes across
 labels (example.py's Post 'Samuel' collides with Person 'Samuel'); we keep
 labels distinct and document the divergence.
 
 Scale: node/edge tables partition like any DataFrame; label+attribute
-filters push into the scan. The facade's stores start as empty
+filters push into the scan, and Catalyst inlines each named table where
+it is used, so the statement plans exactly as the same joins built
+through the DataFrame API would. The facade's stores start as empty
 LocalRelations and keep a true size estimate through every checkpoint
 (localframe.py), so Catalyst plans the joins of a small graph as
 broadcast joins up front, shipping the small side to the other as GraphX
@@ -47,6 +61,14 @@ NODES_SCHEMA = "id string, label string, name string, attrs map<string,string>"
 EDGES_SCHEMA = "src string, dst string, rel string"
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier. Braces double as well:
+    spark.sql formats its text with str.format when it is given
+    DataFrames to refer to."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
 class CypherCompiler:
     def __init__(self, nodes: DataFrame, edges: DataFrame) -> None:
         self.nodes = nodes
@@ -60,12 +82,13 @@ class CypherCompiler:
         with_names: bool = False,
         with_attrs: bool = False,
     ) -> DataFrame:
-        """Compile chains to a join DAG; returns one column per returned
-        variable (node id). With ``with_names`` each returned variable
-        also projects a ``<var>_name`` column; with ``with_attrs`` it also
-        projects ``<var>_attrs``, the node's full attribute dict rendered
-        canonically as 'k=v;k=v' with keys sorted (the reference returns
-        whole node objects incl. the attribute dict, client.py:1198-1219)."""
+        """Compile the pattern to one SQL statement; returns one column
+        per returned variable (node id). With ``with_names`` each returned
+        variable also projects a ``<var>_name`` column; with ``with_attrs``
+        it also projects ``<var>_attrs``, the node's full attribute dict
+        rendered canonically as 'k=v;k=v' with keys sorted (the reference
+        returns whole node objects incl. the attribute dict,
+        client.py:1198-1219)."""
         # Merge per-variable constraints across all occurrences.
         constraints: dict[str, Node] = {}
         # Variables whose merged constraints are contradictory (the same
@@ -115,9 +138,7 @@ class CypherCompiler:
         # OPTIONAL MATCH: its own constraint scope — a label/attr stated
         # in the optional pattern must not filter the mandatory rows.
         opt_constraints: dict[str, Node] = {}
-        opt_chains = normalize(
-            getattr(parser, "optional_chains", []), opt_constraints
-        )
+        opt_chains = normalize(parser.optional_chains, opt_constraints)
         shared_vars = sorted(constraints.keys() & opt_constraints.keys())
         for v in shared_vars:
             oc = opt_constraints[v]
@@ -135,82 +156,99 @@ class CypherCompiler:
         # constraints as inline {attr: 'v'} maps — identical semantics,
         # applied at candidate generation (so the filter sits UNDER the
         # pattern joins, not over the joined result).
-        for var, attr, value in getattr(parser, "where_clause", []):
+        for var, attr, value in parser.where_clause:
             if var not in constraints:
                 raise ValueError(f"where references unbound variable {var!r}")
             merge_attrs(var, constraints[var].attributes, {attr: value})
 
-        def candidates(var: str, cons: dict[str, Node] | None = None) -> DataFrame:
-            c = (cons if cons is not None else constraints)[var]
-            df = self.nodes
+        # The statement's WITH list, and the values of its parameters.
+        tables: list[str] = []
+        params: dict[str, str] = {}
+
+        def param(value: str) -> str:
+            params[f"p{len(params)}"] = value
+            return f":p{len(params) - 1}"
+
+        def table(body: str) -> str:
+            tables.append(f"__t{len(tables)} AS ({body})")
+            return f"__t{len(tables) - 1}"
+
+        def candidates(var: str, cons: dict[str, Node]) -> str:
+            """A table of the ids that may bind ``var``. A non-name
+            attribute probes the free-form ``attrs`` map (missing key ->
+            NULL -> row filtered), the reference's attribute-index lookup
+            (client.py:876-891)."""
+            c = cons[var]
+            where = []
             if var in impossible:
-                return df.filter(F.lit(False)).select(
-                    F.col("id").alias(var)
-                )
-            if c.label:
-                df = df.filter(F.col("label") == c.label)
-            for k, v in c.attributes.items():
-                if k == "name":
-                    df = df.filter(F.col("name") == v)
-                else:
-                    # Free-form attribute: map probe (missing key -> NULL
-                    # -> row filtered), the reference's attribute-index
-                    # lookup (client.py:876-891).
-                    df = df.filter(F.element_at(F.col("attrs"), k) == v)
-            return df.select(F.col("id").alias(var))
+                where.append("false")
+            else:
+                if c.label:
+                    where.append(f"label = {param(c.label)}")
+                for k, v in c.attributes.items():
+                    col = ("name" if k == "name"
+                           else f"element_at(attrs, {param(k)})")
+                    where.append(f"{col} = {param(v)}")
+            sql = "SELECT id FROM {nodes}"
+            if where:
+                sql += " WHERE " + " AND ".join(where)
+            return table(sql)
 
-        def edge_relation(edge: Edge) -> DataFrame:
-            """(src, dst) pairs the edge pattern relates. A plain edge is
-            the rel-filtered edge list; a variable-length edge
-            (-[:R*lo..hi]->) is the union of its h-fold self-compositions
-            for h in [lo, hi] — pair-EXISTS semantics (one row per
-            reachable pair, not per path), which is indistinguishable
-            from path-multiplicity semantics here because MATCH output is
-            DISTINCT over the bound variables. Bounded hops = bounded
-            joins; each composition level is deduplicated so a dense
-            clique can't multiply intermediate rows. The n-hop BFS with
-            distances lives in operators/graph.n_hop_reach."""
-            e = self.edges.filter(F.col("rel") == edge.name).select("src", "dst")
-            if edge.min_hops == 1 and edge.max_hops == 1:
-                return e
-            e = e.distinct()
-            reach: DataFrame | None = None
-            cur = e
-            for h in range(1, edge.max_hops + 1):
-                if h >= edge.min_hops:
-                    reach = cur if reach is None else reach.unionByName(cur)
-                if h < edge.max_hops:
-                    cur = (
-                        cur.alias("l")
-                        .join(e.alias("r"), F.col("l.dst") == F.col("r.src"))
-                        .select(
-                            F.col("l.src").alias("src"),
-                            F.col("r.dst").alias("dst"),
-                        )
-                        .distinct()
-                    )
-            return reach.distinct()
-
-        edge_idx = 0
+        def edge_relation(edge: Edge) -> str:
+            """A table of the (src, dst) pairs the edge pattern relates.
+            A plain edge is the rel-filtered edge list; a variable-length
+            edge (-[:R*lo..hi]->) is the union of its h-fold
+            self-compositions for h in [lo, hi] — pair-EXISTS semantics
+            (one row per reachable pair, not per path), which is
+            indistinguishable from path-multiplicity semantics here
+            because MATCH output is DISTINCT over the bound variables.
+            Bounded hops = bounded joins; each composition level is
+            deduplicated so a dense clique can't multiply intermediate
+            rows. The n-hop BFS with distances lives in
+            operators/graph.n_hop_reach."""
+            rel = f"src, dst FROM {{edges}} WHERE rel = {param(edge.name)}"
+            if edge.min_hops == edge.max_hops == 1:
+                return table("SELECT " + rel)
+            levels = [table("SELECT DISTINCT " + rel)]
+            for _ in range(1, edge.max_hops):
+                levels.append(table(
+                    f"SELECT DISTINCT l.src, r.dst FROM {levels[-1]} l "
+                    f"JOIN {levels[0]} r ON l.dst = r.src"))
+            return table(" UNION ".join(
+                f"SELECT src, dst FROM {t}"
+                for t in levels[edge.min_hops - 1:]))
 
         def compile_chains(
             norm_chains, cons: dict[str, Node]
-        ) -> tuple[DataFrame | None, set[str]]:
-            nonlocal edge_idx
-            result: DataFrame | None = None
-            bound: set[str] = set()
+        ) -> tuple[str, dict[str, str]]:
+            """The FROM clause of the chains' joins, and the column that
+            binds each variable. A variable met again is *bound*: its
+            later constraints join on the same column."""
+            joins: list[str] = []
+            bound: dict[str, str] = {}
+
+            def join(t: str, on: str | None = None) -> None:
+                if not joins:
+                    joins.append(t)
+                elif on is None:
+                    joins.append(f"CROSS JOIN {t}")
+                else:
+                    joins.append(f"JOIN {t} ON {on}")
+
+            def bind(var: str, on_id: str | None = None) -> None:
+                t = candidates(var, cons)
+                join(t, on_id and f"{t}.id = {on_id}")
+                bound[var] = f"{t}.id"
+
             for chain in norm_chains:
                 if len(chain) == 1:
                     # Lone-node chain in a (possibly multi-chain) MATCH:
                     # bind it via cross product with the rest — the
                     # Cypher contract for comma-separated disconnected
-                    # patterns. Without this the chain was silently
-                    # dropped (or its RETURN raised 'unbound').
+                    # patterns.
                     _, v = chain[0]
                     if v not in bound:
-                        c = candidates(v, cons)
-                        result = c if result is None else result.crossJoin(c)
-                        bound.add(v)
+                        bind(v)
                     continue
                 for i in range(0, len(chain) - 2, 2):
                     (_, v1), (_, edge), (_, v2) = (
@@ -219,124 +257,91 @@ class CypherCompiler:
                     src_var, dst_var = (
                         (v1, v2) if edge.direction == "right" else (v2, v1)
                     )
-                    e = edge_relation(edge).select(
-                        F.col("src").alias(f"__src{edge_idx}"),
-                        F.col("dst").alias(f"__dst{edge_idx}"),
-                    )
-                    if result is None:
-                        result = candidates(src_var, cons).join(
-                            e, F.col(src_var) == F.col(f"__src{edge_idx}")
-                        )
-                        bound.add(src_var)
-                    else:
-                        if src_var in bound:
-                            result = result.join(
-                                e, F.col(src_var) == F.col(f"__src{edge_idx}")
-                            )
-                        else:
-                            result = result.crossJoin(
-                                candidates(src_var, cons)
-                            ).join(
-                                e, F.col(src_var) == F.col(f"__src{edge_idx}")
-                            )
-                            bound.add(src_var)
+                    if src_var not in bound:
+                        bind(src_var)
+                    e = edge_relation(edge)
+                    on = f"{bound[src_var]} = {e}.src"
                     if dst_var in bound:
-                        result = result.filter(
-                            F.col(dst_var) == F.col(f"__dst{edge_idx}")
-                        )
+                        join(e, f"{on} AND {bound[dst_var]} = {e}.dst")
                     else:
-                        result = result.join(
-                            candidates(dst_var, cons),
-                            F.col(dst_var) == F.col(f"__dst{edge_idx}"),
-                        )
-                        bound.add(dst_var)
-                    result = result.drop(
-                        f"__src{edge_idx}", f"__dst{edge_idx}"
-                    )
-                    edge_idx += 1
-            return result, bound
+                        join(e, on)
+                        bind(dst_var, f"{e}.dst")
+            return " ".join(joins), bound
 
-        result, bound = compile_chains(chains, constraints)
-        if result is None:  # single-node pattern, no edges
-            only = next(iter(constraints))
-            result = candidates(only)
-            bound.add(only)
-
+        frm, bound = compile_chains(chains, constraints)
         if opt_chains:
             # Left-join the optional pattern's matches on the shared
             # variables: rows of the mandatory result with no optional
             # match keep NULLs for the optional-only variables — the
             # standard OPTIONAL MATCH contract. Shared vars inside the
             # optional compile use bare candidates (all ids); the join
-            # narrows them, and Catalyst pushes the equi-condition down.
-            opt_result, opt_bound = compile_chains(opt_chains, opt_constraints)
-            if opt_result is None:
-                raise ValueError("optional match requires an edge pattern")
-            opt_result = opt_result.select(
-                *sorted(opt_bound)
-            ).distinct()
-            result = result.join(opt_result, shared_vars, "left")
-            bound |= opt_bound
+            # narrows them.
+            opt_frm, opt_bound = compile_chains(opt_chains, opt_constraints)
+            o = table("SELECT DISTINCT " + ", ".join(
+                f"{opt_bound[v]} AS {_ident(v)}" for v in sorted(opt_bound)
+            ) + f" FROM {opt_frm}")
+            frm += f" LEFT JOIN {o} ON " + " AND ".join(
+                f"{bound[v]} = {o}.{_ident(v)}" for v in shared_vars)
+            for v in opt_bound.keys() - bound.keys():
+                bound[v] = f"{o}.{_ident(v)}"
 
-        count_var = getattr(parser, "return_count", None)
+        count_var = parser.return_count
         if count_var is not None:
             if count_var not in bound:
                 raise ValueError(f"count() of unbound variable {count_var!r}")
             # count(v) = number of DISTINCT matches of v (match output is
-            # set-semantics over bound variables). F.count(col), not
+            # set-semantics over bound variables). count(v), not
             # count(1): an OPTIONAL MATCH variable contributes a NULL for
             # unmatched rows, and Cypher count(expr) skips NULLs.
-            return (
-                result.select(count_var)
-                .distinct()
-                .agg(F.count(F.col(count_var)).alias("cnt"))
+            select = (f"SELECT count(DISTINCT {bound[count_var]}) AS cnt "
+                      f"FROM {frm}")
+        else:
+            # Default projection (no RETURN): named variables only — the
+            # __anonN synthetics backing anonymous pattern nodes are
+            # internal and must not leak into the result schema.
+            out_vars = parser.return_clause or sorted(
+                v for v in bound if not v.startswith("__anon")
             )
-        # Default projection (no RETURN): named variables only — the
-        # __anonN synthetics backing anonymous pattern nodes are
-        # internal and must not leak into the result schema.
-        out_vars = parser.return_clause or sorted(
-            v for v in bound if not v.startswith("__anon")
-        )
-        if not out_vars:
-            raise ValueError(
-                "match binds no named variables — add a RETURN clause "
-                "or name a pattern node"
-            )
-        missing = [v for v in out_vars if v not in bound]
-        if missing:
-            raise ValueError(f"return of unbound variables: {missing}")
-        out = result.select(*out_vars).distinct()
-        if with_names or with_attrs:
-            proj = [F.col("id")]
-            if with_names:
-                proj.append(F.col("name"))
-            if with_attrs:
-                # Canonical sorted 'k=v;k=v' rendering — deterministic
-                # across engines (map iteration order is not).
-                proj.append(
-                    F.concat_ws(
-                        ";",
-                        F.array_sort(
-                            F.transform(
-                                F.map_entries(F.col("attrs")),
-                                lambda e: F.concat(
-                                    e["key"], F.lit("="), e["value"]
-                                ),
-                            )
-                        ),
-                    ).alias("attrs_str")
+            if not out_vars:
+                raise ValueError(
+                    "match binds no named variables — add a RETURN clause "
+                    "or name a pattern node"
                 )
-            node_proj = self.nodes.select(*proj)
+            missing = [v for v in out_vars if v not in bound]
+            if missing:
+                raise ValueError(f"return of unbound variables: {missing}")
+            select = "SELECT DISTINCT " + ", ".join(
+                f"{bound[v]} AS {_ident(v)}" for v in out_vars
+            ) + f" FROM {frm}"
+        if count_var is None and (with_names or with_attrs):
+            # Whole-node objects: each returned variable left-joins its
+            # node (an OPTIONAL MATCH variable can be NULL — an inner
+            # join here would silently drop those rows). The attribute
+            # dict renders as canonical sorted 'k=v;k=v', deterministic
+            # across engines (map iteration order is not).
+            proj = ["id"]
+            if with_names:
+                proj.append("name")
+            if with_attrs:
+                proj.append(
+                    "concat_ws(';', array_sort(transform(map_entries(attrs),"
+                    " e -> concat(e.key, '=', e.value)))) AS attrs"
+                )
+            m = table(select)
+            cols = [f"{m}.{_ident(v)}" for v in out_vars]
+            joins = ""
             for v in out_vars:
-                cols = [F.col("id").alias(v)]
+                n = table(f"SELECT {', '.join(proj)} FROM {{nodes}}")
+                joins += f" LEFT JOIN {n} ON {n}.id = {m}.{_ident(v)}"
                 if with_names:
-                    cols.append(F.col("name").alias(f"{v}_name"))
+                    cols.append(f"{n}.name AS {_ident(v + '_name')}")
                 if with_attrs:
-                    cols.append(F.col("attrs_str").alias(f"{v}_attrs"))
-                # left: an OPTIONAL MATCH variable can be NULL — an inner
-                # join here would silently drop those rows.
-                out = out.join(node_proj.select(*cols), v, "left")
-        return out
+                    cols.append(f"{n}.attrs AS {_ident(v + '_attrs')}")
+            select = f"SELECT {', '.join(cols)} FROM {m}{joins}"
+        return self.nodes.sparkSession.sql(
+            f"WITH {', '.join(tables)} {select}",
+            args=params, nodes=self.nodes, edges=self.edges,
+        )
 
     # -- MERGE --------------------------------------------------------------
 

@@ -82,6 +82,14 @@ def get_spark(
         # default 30min periodic GC lets dead blocks pile up in storage.
         # 5min bounds the pile without measurable pause cost.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # Tungsten pages of 1 MiB, Spark's floor. The default is sized
+        # from the heap, 64 MiB at 8g on 4 cores, and
+        # MemoryConsumer.allocatePage takes max(pageSize, required), so
+        # the first row into any hash aggregate, hash-join build or
+        # broadcast relation costs one whole page: on a KB-sized facade
+        # op that is a 64 MiB allocation, and a humongous one under G1
+        # (4 MiB regions), where 1 MiB stays under half a region.
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -152,6 +152,19 @@ def test_documents_scenario(db):
     }
 
 
+def test_save_infers_schema_from_every_document(spark):
+    """A key that first appears after the 1024th document of a
+    collection still reaches its view."""
+    import json
+
+    db = HashDb(spark)
+    db._docs["c"] = {str(i): json.dumps({"name": f"n{i}"})
+                     for i in range(1, 1025)}
+    db.save("c", "1025", {"name": "late", "late_key": 1})
+    assert db.sql("select c.late_key from c where c.doc_id = '1025'") == [
+        {"late_key": 1}]
+
+
 def test_explain_returns_physical_plan(db):
     db.sql("insert into exp_t (name, score) values ('a', 1)")
     plan = db.explain(
@@ -405,11 +418,28 @@ def test_stores_report_their_real_size(spark, monkeypatch):
         spark.conf.set(key, old)
 
 
-def test_facade_read_jobs(spark):
+def test_facade_read_jobs(spark, monkeypatch):
     """Stores that know their size plan small: a MATCH's joins
     broadcast, so each MATCH shape runs at most 4 jobs, and a KB-sized
     table is one partition, so a group by or a select distinct runs
-    without an exchange, in one job."""
+    without an exchange, in one job. Each MATCH is one SQL statement and
+    builds no DataFrame join: its plan is analysed once, not once per
+    join."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    calls = []
+
+    def record(cls, name):
+        real = getattr(cls, name)
+
+        def recording(self, *args, **kwargs):
+            calls.append(name)
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, recording)
+
+    record(SparkSession, "sql")
+    record(DataFrame, "join")
     db = HashDb(spark)
     for i in range(6):
         db.sql(f"insert into rj (rj_name, age) values ('r{i}', {20 + i % 3})")
@@ -428,11 +458,19 @@ def test_facade_read_jobs(spark):
         ("match (p:Person) optional match (p)-[:FOLLOWS]->(q:Person) "
          "return p, q", ("p", "q"),
          [(p(n), p("H") if n == "A" else None) for n in "ABCDEFGH"]),
+        ("match (p:Person)-[:FRIENDS]->(q) where p.name = 'B' return p, q",
+         ("p", "q"), [(p("B"), p("C")), (p("B"), p("G"))]),
+        ("match (a:Person {'name': 'A'})-[:FRIENDS*1..3]->(b:Person) "
+         "return count(b)", ("cnt",), [(5,)]),
+        ("match (a:Person {'name': 'H'}), (b)<-[:FOLLOWS]-() return a, b",
+         ("a", "b"), [(p("H"), p("H"))]),
     ]
     for stmt, cols, want in matches:
+        calls.clear()
         got, jobs = _spark_jobs(spark, lambda: db.cypher(stmt))
         assert sorted(tuple(r[c] for c in cols) for r in got) == want
         assert jobs <= 4, stmt
+        assert calls == ["sql"], stmt
     got, jobs = _spark_jobs(
         spark, lambda: db.sql("select rj.age, count(*) from rj group by rj.age"))
     assert (sorted((r["age"], r["cnt"]) for r in got), jobs) == (
@@ -440,6 +478,97 @@ def test_facade_read_jobs(spark):
     got, jobs = _spark_jobs(
         spark, lambda: db.sql("select distinct rj.age from rj"))
     assert (sorted(r["age"] for r in got), jobs) == ([20, 21, 22], 1)
+
+
+# Node names, attribute keys and values that would break a statement, or
+# change it, if they were spliced into its text.
+_HOSTILE_NAMES = [
+    'Ann "the" {x}', ":p0", "`Bo`", "Cy -- ; drop", "D\\é", "O'Neil",
+    "東京 {nodes}",
+]
+_HOSTILE_KEY = "`k` :p2 }"
+
+
+def _quoted(value: str) -> str:
+    return f'"{value}"' if "'" in value else f"'{value}'"
+
+
+def _hostile_graph(spark):
+    """A FRIENDS cycle over _HOSTILE_NAMES, a FOLLOWS edge from the
+    first node to the last, and two attributes per node; returns the
+    facade, each node's attribute value and the model's edges."""
+    db = HashDb(spark)
+    tag = {n: f"t{i}:p1 ';{{" for i, n in enumerate(_HOSTILE_NAMES)}
+
+    def node(var: str, name: str) -> str:
+        return (f"({var}:Person {{'name': {_quoted(name)}, "
+                f"'tag': {_quoted(tag[name])}, "
+                f"'{_HOSTILE_KEY}': {_quoted(tag[name])}}})")
+
+    ring = _HOSTILE_NAMES + _HOSTILE_NAMES[:1]
+    edges = {(a, b, "FRIENDS") for a, b in zip(ring, ring[1:])}
+    edges.add((_HOSTILE_NAMES[0], _HOSTILE_NAMES[-1], "FOLLOWS"))
+    for a, b, rel in sorted(edges):
+        db.cypher(f"merge {node('a', a)}-[:{rel}]->{node('b', b)}")
+    return db, tag, edges
+
+
+def _hostile_matches(tag, edges):
+    """(statement, returned columns, the model's rows) for each MATCH
+    shape: chain, *1..3, count(), WHERE, an attribute map and OPTIONAL."""
+    def pid(name):
+        return f"person:{name}"
+
+    def succ(name, rel):
+        return {b for a, b, r in edges if a == name and r == rel}
+
+    for n in _HOSTILE_NAMES:
+        named = f"(p:Person {{'name': {_quoted(n)}}})"
+        yield (f"match {named}-[:FRIENDS]->(f:Person)-[:FRIENDS]->(g:Person) "
+               "return f, g", ("f", "g"),
+               {(pid(f), pid(g)) for f in succ(n, "FRIENDS")
+                for g in succ(f, "FRIENDS")})
+        reach, frontier = set(), {n}
+        for _ in range(3):
+            frontier = {b for a in frontier for b in succ(a, "FRIENDS")}
+            reach |= frontier
+        yield (f"match {named}-[:FRIENDS*1..3]->(b:Person) return p, b",
+               ("p", "b"), {(pid(n), pid(b)) for b in reach})
+        yield (f"match {named}-[:FRIENDS*1..3]->(b:Person) return count(b)",
+               ("cnt",), {(len(reach),)})
+        yield (f"match (p:Person)-[:FRIENDS]->(q) where p.tag = "
+               f"{_quoted(tag[n])} return p, q", ("p", "q"),
+               {(pid(n), pid(q)) for q in succ(n, "FRIENDS")})
+        yield (f"match (p:Person {{'{_HOSTILE_KEY}': {_quoted(tag[n])}}}) "
+               "return p", ("p",), {(pid(n),)})
+    yield ("match (p:Person) optional match (p)-[:FOLLOWS]->(q:Person) "
+           "return p, q", ("p", "q"),
+           {(pid(n), pid(q) if q else None)
+            for n in _HOSTILE_NAMES for q in succ(n, "FOLLOWS") or {None}})
+
+
+def test_match_values_are_bound_not_spliced(spark, monkeypatch):
+    """Labels, relationship names, attribute keys and values reach a
+    MATCH as named parameters: names and values full of SQL and format
+    syntax come back exactly as the model says, every one of them is a
+    bound value, and the statement's text holds no string literal."""
+    from pyspark.sql import SparkSession
+
+    db, tag, edges = _hostile_graph(spark)
+    statements = []
+    real_sql = SparkSession.sql
+
+    def recording_sql(self, text, args=None, **kwargs):
+        statements.append((text, args))
+        return real_sql(self, text, args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", recording_sql)
+    for stmt, cols, want in _hostile_matches(tag, edges):
+        got = {tuple(r[c] for c in cols) for r in db.cypher(stmt)}
+        assert got == want, stmt
+    bound = {v for _, args in statements for v in args.values()}
+    assert {*_HOSTILE_NAMES, *tag.values(), _HOSTILE_KEY} <= bound
+    assert not [t for t, _ in statements if "'" in t or '"' in t]
 
 
 def test_sql_script_multi_statement_session(db):

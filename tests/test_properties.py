@@ -445,14 +445,16 @@ class SessionModel:
 
 
 # Few names, so MERGE chains share nodes and a pattern has several paths
-# to one pair; lowercase ASCII search words, since the FTS tokenizer is
-# the subject of test_fts_matches_model. Documents change their inferred
-# schema as they arrive: age is an int, a float, a string or null; the
-# nested address and the non-ASCII key come and go; hobby levels mix
-# ints and floats.
-session_names = st.sampled_from(["Ada", "Bo", "Cy", "Dé"])
+# to one pair; one name is full of SQL and format syntax, which a MATCH
+# must bind and never splice; lowercase ASCII search words, since the
+# FTS tokenizer is the subject of test_fts_matches_model. Documents
+# change their inferred schema as they arrive: age is an int, a float, a
+# string or null; the nested address and the non-ASCII key come and go;
+# hobby levels mix ints and floats.
+_SESSION_NAMES = ["Ada", "Bo", "Cy", "Dé", 'Q"{:p0}`--;\\ü']
+session_names = st.sampled_from(_SESSION_NAMES)
 session_chains = st.tuples(
-    st.permutations(["Ada", "Bo", "Cy", "Dé"]), st.integers(2, 3)
+    st.permutations(_SESSION_NAMES), st.integers(2, 3)
 ).map(lambda t: t[0][:t[1]])
 session_word = st.sampled_from(["spark", "join", "row", "fast"])
 session_words = st.lists(session_word, min_size=1, max_size=4).map(" ".join)

@@ -44,3 +44,24 @@ def test_explicit_driver_memory_skips_the_default(monkeypatch):
     conf = session.get_spark(shuffle_partitions=8)
     assert conf["master"] == "local[*]"
     assert conf["spark.driver.memory"] == "3g"
+
+
+def test_live_session_uses_one_mib_pages(spark):
+    """Every hash aggregate, hash-join build and broadcast relation
+    allocates at least one Tungsten page; the session sizes that page at
+    1 MiB, not from the heap."""
+    memory = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert memory.pageSizeBytes() == 1 << 20
+
+
+def test_extra_conf_overrides_the_page_size(monkeypatch):
+    monkeypatch.setattr(
+        session, "SparkSession", SimpleNamespace(builder=_RecordingBuilder())
+    )
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session.get_spark()["spark.buffer.pageSize"] == "1m"
+    monkeypatch.setattr(
+        session, "SparkSession", SimpleNamespace(builder=_RecordingBuilder())
+    )
+    conf = session.get_spark(extra_conf={"spark.buffer.pageSize": "4m"})
+    assert conf["spark.buffer.pageSize"] == "4m"
