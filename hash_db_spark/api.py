@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from hash_db_spark.cypher.compiler import EDGES_SCHEMA, NODES_SCHEMA, CypherCompiler
 from hash_db_spark.operators import kv as K
 from hash_db_spark.operators.documents import shred_infer
-from hash_db_spark.sql import SqlEngine
+from hash_db_spark.sql.dialect import SqlEngine, statements
 
 from hash_db_spark.localframe import capped_checkpoint, local_frame
 
@@ -185,24 +185,12 @@ class HashDb:
         example.py drives one HTTP POST per statement
         (/root/reference/example.py:86-146: a run of inserts, then
         selects, then an update) — in one call. Statements split on
-        `;`, honoring single-quoted strings (a literal `';'` never
-        splits); each runs in order and the LAST select's rows are
-        returned, wherever it appears (None if the script contains no
-        select at all)."""
-        stmts, buf, in_str = [], [], False
-        for ch in script:
-            if ch == "'":
-                in_str = not in_str
-            if ch == ";" and not in_str:
-                stmts.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-        stmts.append("".join(buf))
+        each `;` outside single-quoted literals (the dialect's literal
+        mask, so a literal `';'` never splits); each runs in order and
+        the LAST select's rows are returned, wherever it appears (None if
+        the script contains no select at all)."""
         result = None
-        for stmt in (s.strip() for s in stmts):
-            if not stmt:
-                continue
+        for stmt in statements(script):
             out = self.sql(stmt)
             if out is not None:
                 result = out

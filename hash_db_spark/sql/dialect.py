@@ -18,6 +18,20 @@ Supported surface (everything example.py exercises):
     update <t> set <t.f> = <v>[, ...] where ...
     create join inner join <t2> on <a.x> = <b.y> ...   (materialized join)
 
+The front end does each step once, for every statement:
+
+- ``mask`` replaces the i-th single-quoted literal with ``'i'`` and keeps
+  the literal strings in a list. Everything after it parses the masked
+  text, so no clause regex or split ever sees a keyword, comma, ``;`` or
+  whitespace run inside a value, and ``_lit`` resolves ``'i'`` back to
+  its string. It is the dialect's only quote-aware code; ``statements``
+  splits a script with it.
+- ``_join_specs`` parses and orients every ``inner join T on a.x = b.y``
+  (``select`` and ``create join``); ``SqlEngine._joined`` is the one
+  merge-join loop (``select`` and ``materialized_view``).
+- ``_where`` compiles a WHERE clause into one ANDed Column plus the
+  document-path predicates (``select`` and ``update``).
+
 Semantic choices vs the reference (SURVEY §2 caveats): typed equality
 (int literals compare numerically, not string-prefix); UPDATE recomputes
 immutable frames (Delta MERGE in production); ``create join`` registers an
@@ -35,6 +49,8 @@ entry, so a statement that raises changes nothing.
 
 from __future__ import annotations
 
+from functools import reduce
+import operator
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -42,49 +58,45 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from hash_db_spark.localframe import append, capped_checkpoint, local_frame
+from hash_db_spark.operators.documents import compile_path, filter_path
 from hash_db_spark.operators.fts import compile_fts, compile_phrase
 # insert_rows is unused here but stays importable: perfbench's tracer
 # patches it by name in this module when it installs.
 from hash_db_spark.operators.relational import insert_rows, update_where  # noqa: F401
 
-_STR = r"'([^']*)'"
 _TYPES = {str: T.StringType(), int: T.LongType(), float: T.DoubleType()}
 _REF = r"([A-Za-z_][\w]*)\.([\w~\[\]]+)"
+_MASKED = r"'(\d+)'"  # a masked literal: its index in the literal list
+_JOIN = rf"inner join (\w+) on {_REF} = {_REF}"
+_OPS = {"=": operator.eq, "!=": operator.ne, "<>": operator.ne,
+        "<": operator.lt, "<=": operator.le, ">": operator.gt,
+        ">=": operator.ge}
 
 
-def _normalize_ws(text: str) -> str:
-    """Collapse whitespace runs to single spaces OUTSIDE single-quoted
-    literals. A bare ``' '.join(text.split())`` would rewrite string
-    VALUES — `'A  B'` silently stored as `'A B'`, phrase queries with
-    tabs altered — corrupting data with no error."""
-    out: list[str] = []
-    in_str = False
-    pending = False
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str and ch.isspace():
-            pending = True
-            continue
-        if pending and out:
-            out.append(" ")
-        pending = False
-        out.append(ch)
-    return "".join(out)
+def mask(text: str) -> tuple[str, list[str]]:
+    """-> (text with the i-th ``'...'`` literal replaced by ``'i'`` and
+    whitespace runs collapsed to one space, the literal strings). The
+    dialect has no escapes: a literal runs to the next quote, and a quote
+    left over raises."""
+    literals: list[str] = []
+
+    def index(m: re.Match) -> str:
+        literals.append(m.group(1))
+        return f"'{len(literals) - 1}'"
+
+    masked = re.sub(r"'([^']*)'", index, text)
+    if masked.count("'") != 2 * len(literals):
+        raise ValueError(f"unterminated string literal in {text!r}")
+    return " ".join(masked.split()), literals
 
 
-def _split_outside_quotes(s: str, pattern: str) -> list[str]:
-    """Split ``s`` on regex ``pattern`` matches that fall outside
-    single-quoted literals — `where name = 'rock and roll'` must not
-    split at the quoted 'and', and an UPDATE set list must not split at
-    a comma inside a value."""
-    parts, last = [], 0
-    for m in re.finditer(pattern, s, re.IGNORECASE):
-        if s.count("'", 0, m.start()) % 2 == 0:
-            parts.append(s[last : m.start()])
-            last = m.end()
-    parts.append(s[last:])
-    return parts
+def statements(script: str) -> list[str]:
+    """The non-empty statements of a script: split on every ``;`` outside
+    a literal, each with its literals restored."""
+    masked, literals = mask(script)
+    restore = lambda m: f"'{literals[int(m.group(1))]}'"  # noqa: E731
+    return [re.sub(_MASKED, restore, s).strip()
+            for s in masked.split(";") if s.strip()]
 
 
 def _fts_or_phrase(fld: str, q: str):
@@ -95,12 +107,13 @@ def _fts_or_phrase(fld: str, q: str):
     return compile_fts(fld, q)
 
 
-def _lit(token: str):
-    """Reference literal typing: [0-9.]+ coerces to int
-    (/root/reference/server.py:477-478), else string."""
+def _lit(token: str, literals: list[str]):
+    """Reference literal typing: a masked ``'i'`` is its string,
+    [0-9.]+ coerces to int (/root/reference/server.py:477-478), and any
+    other token stays a string."""
     token = token.strip()
-    if m := re.fullmatch(_STR, token):
-        return m.group(1)
+    if m := re.fullmatch(_MASKED, token):
+        return literals[int(m.group(1))]
     if re.fullmatch(r"[0-9]+", token):
         return int(token)
     if re.fullmatch(r"[0-9.]+", token):
@@ -111,27 +124,82 @@ def _lit(token: str):
     return token
 
 
+def _join_specs(text: str) -> list[tuple[str, str, str, str]]:
+    """Every ``inner join T on a.x = b.y`` in masked ``text`` as
+    (left table, left field, T, T's field): exactly one side of the ON
+    clause must name T, and that side becomes the right one."""
+    specs = []
+    for right, lt, lf, rt, rf in re.findall(_JOIN, text, re.IGNORECASE):
+        if (lt == right) == (rt == right):
+            raise ValueError(
+                f"join {right}: exactly one side of the ON clause must "
+                f"name {right}: {text!r}"
+            )
+        specs.append((rt, rf, lt, lf) if lt == right else (lt, lf, rt, rf))
+    if len(specs) != len(re.findall(r"\binner join\b", text, re.IGNORECASE)):
+        # A join whose refs aren't table.field would otherwise be
+        # silently dropped and the query run un-joined.
+        raise ValueError(f"join requires table.field = table.field refs: {text!r}")
+    return specs
+
+
+def _where(scope: set[str], clause: str, literals: list[str]):
+    """Compile a masked WHERE clause -> (comparisons ANDed before FTS
+    terms as one Column, or None if it has neither; [(document path,
+    value)]). op ∈ {=, !=, <>, <, <=, >, >=} — comparison operators are a
+    free-win extension (§2.2; the reference grammar only has ``=``,
+    /root/reference/server.py SQL tests)."""
+    cmps, fts, paths = [], [], []
+    for part in re.split(r" and ", clause, flags=re.IGNORECASE):
+        fts_m = re.fullmatch(rf"{_REF} ~ {_MASKED}", part)
+        # value lookahead: 'age >< 3' must not parse as '>' with literal '< 3'
+        m = fts_m or re.fullmatch(
+            rf"{_REF} ?(<=|>=|!=|<>|=|<|>) ?(?![<>=!])(.+)", part
+        )
+        if not m:
+            raise ValueError(f"bad where predicate: {part!r}")
+        if m.group(1) not in scope:
+            raise ValueError(f"unknown table in reference {m.group(1)}.{m.group(2)}")
+        if fts_m:
+            fts.append(_fts_or_phrase(m.group(2), literals[int(m.group(3))]))
+            continue
+        _, fld, op, value = m.groups()
+        value = _lit(value, literals)
+        if not fld.startswith("~"):
+            cmps.append(_OPS[op](F.col(fld), F.lit(value)))
+        elif op == "=":
+            paths.append((fld.lstrip("~"), value))
+        else:
+            raise ValueError(
+                f"document-path predicates support '=' only, got {op!r}"
+            )
+    # Comparisons first: they are cheap, and the tokenizing FTS terms
+    # then run only on the rows that pass them.
+    conds = cmps + fts
+    return (reduce(operator.and_, conds) if conds else None), paths
+
+
 class SqlEngine:
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
         self.spark = spark
         self.tables: dict[str, DataFrame] = dict(tables)
-        # table -> list of (right_table, left_ref, right_ref) join specs
-        # registered by `create join` (reference server.py:674-696).
-        self.joins: dict[str, list[tuple[str, str, str]]] = {}
+        # driving table -> its `create join` specs as _join_specs returns
+        # them (reference server.py:674-696).
+        self.joins: dict[str, list[tuple[str, str, str, str]]] = {}
 
     # ------------------------------------------------------------------ api
 
     def sql(self, text: str) -> DataFrame | None:
-        text = _normalize_ws(text)
-        low = text.lower()
+        masked, literals = mask(text)
+        low = masked.lower()
         if low.startswith("create join"):
-            return self._create_join(text)
+            return self._create_join(masked)
         if low.startswith("insert into"):
-            return self._insert(text)
+            return self._insert(masked, literals)
         if low.startswith("update "):
-            return self._update(text)
+            return self._update(masked, literals)
         if low.startswith("select "):
-            return self._select(text)
+            return self._select(masked, literals)
         raise ValueError(f"unsupported statement: {text[:60]!r}")
 
     def materialized_view(self, table: str) -> DataFrame:
@@ -139,81 +207,47 @@ class SqlEngine:
         table joined through every spec. Computed lazily — Catalyst plans
         it per query; a production deployment materializes it with
         streaming/windows.materialized_view_stream."""
-        df = self.tables[table]
-        for right, lref, rref in self.joins.get(table, []):
-            df = self._merge_join(
-                df, lref.split(".", 1)[1], self.tables[right], rref.split(".", 1)[1]
-            )
+        return self._joined(self.tables[table], self.joins.get(table, []))
+
+    def _joined(self, df: DataFrame, specs) -> DataFrame:
+        """``df`` inner-equijoined through each _join_specs spec, with the
+        reference's row-merge semantics: output columns are bare field
+        names, and on a name collision (notably the auto `id`) the right
+        side wins ({**build_row, **probe_row},
+        /root/reference/client.py:418)."""
+        for _, lfield, right, rfield in specs:
+            rdf = self.tables[right]
+            dup = [c for c in df.columns if c in rdf.columns]
+            lkey = F.col(lfield)
+            if lfield in dup:
+                df = df.withColumn("__lkey", lkey)
+                lkey = F.col("__lkey")
+            df = df.drop(*dup).join(rdf, lkey == F.col(rfield)).drop("__lkey")
         return df
-
-    # -------------------------------------------------------------- helpers
-
-    def _resolve(self, scope: dict[str, DataFrame], ref: str, allow_any=False) -> Column:
-        """table.field → Column in scope (bare field names; the join
-        output merges columns like the reference's dict-merge row model,
-        client.py:418)."""
-        t, f = ref.split(".", 1)
-        if t not in scope and not allow_any:
-            raise ValueError(f"unknown table in reference {ref!r}")
-        return F.col(f)
-
-    def _merge_join(
-        self, left: DataFrame, lfield: str, right: DataFrame, rfield: str
-    ) -> DataFrame:
-        """Inner equijoin with the reference's row-merge semantics: on
-        column-name collision (notably the auto `id`) the right side wins
-        ({**build_row, **probe_row}, /root/reference/client.py:418)."""
-        dup = [c for c in left.columns if c in right.columns]
-        lkey = F.col(lfield)
-        if lfield in dup:
-            left = left.withColumn("__lkey", lkey)
-            lkey = F.col("__lkey")
-        left = left.drop(*dup)
-        return left.join(right, lkey == F.col(rfield)).drop("__lkey")
 
     # ----------------------------------------------------------- statements
 
     def _create_join(self, text: str):
-        specs = re.findall(
-            rf"inner join (\w+) on {_REF} = {_REF}", text, re.IGNORECASE
-        )
+        specs = _join_specs(text)
         if not specs:
             raise ValueError(f"create join: no specs in {text!r}")
-        n_joins = len(re.findall(r"\binner join\b", text, re.IGNORECASE))
-        if len(specs) != n_joins:
-            # Unqualified refs match the statement router but not _REF;
-            # silently registering a subset would materialize a partial
-            # join with no error.
-            raise ValueError(
-                f"create join: every spec needs table.field = "
-                f"table.field refs: {text!r}"
-            )
-        # The driving table is the one that appears in specs but is never
-        # the joined (right) table — e.g. items in the README example.
-        rights = {s[0] for s in specs}
-        mentioned = {s[1] for s in specs} | {s[3] for s in specs}
-        driving_cands = mentioned - rights
-        if not driving_cands:
+        # The driving table is the one the specs join from but never join
+        # to — e.g. items in the README example.
+        driving = {s[0] for s in specs} - {s[2] for s in specs}
+        if not driving:
             raise ValueError("create join: cannot infer driving table")
-        if len(driving_cands) > 1:
+        if len(driving) > 1:
             # Two disconnected chains in one statement: set.pop() would
             # pick a driving table hash-order-nondeterministically and
             # register specs under a table one chain never touches.
             raise ValueError(
-                f"create join: ambiguous driving table {sorted(driving_cands)}"
+                f"create join: ambiguous driving table {sorted(driving)}"
                 " — register one chain per statement"
             )
-        driving = driving_cands.pop()
-        registered = []
-        for right, lt, lf, rt, rf in specs:
-            # Normalize so left ref belongs to the driving side.
-            if lt == right:
-                lt, lf, rt, rf = rt, rf, lt, lf
-            registered.append((right, f"{lt}.{lf}", f"{right}.{rf}"))
-        self.joins[driving] = registered
+        self.joins[driving.pop()] = specs
         return None
 
-    def _insert(self, text: str):
+    def _insert(self, text: str, literals: list[str]):
         m = re.match(
             r"insert into (\w+) \(([^)]*)\) values \((.*)\)", text, re.IGNORECASE
         )
@@ -221,10 +255,12 @@ class SqlEngine:
             raise ValueError(f"bad insert: {text!r}")
         table, fields_s, values_s = m.groups()
         fields = [f.strip() for f in fields_s.split(",")]
-        values = self._split_values(values_s)
+        values = [v.strip() for v in values_s.split(",")]
+        if "" in values:
+            raise ValueError(f"insert: empty value in ({values_s})")
         if len(fields) != len(values):
             raise ValueError(f"insert arity mismatch: {fields} vs {values}")
-        cells = dict(zip(fields, values))
+        cells = {f: _lit(v, literals) for f, v in zip(fields, values)}
         cells.pop("id", None)  # the engine assigns ids
         base = self.tables.get(table)
         # The reference's per-table counter (server.py:757-771), read off
@@ -240,63 +276,7 @@ class SqlEngine:
         self.tables[table] = append(base, rows, schema)
         return None
 
-    def _split_values(self, s: str) -> list:
-        out, i, n = [], 0, len(s)
-        while i < n:
-            while i < n and s[i] in " ,":
-                i += 1
-            if i >= n:
-                break
-            if s[i] == "'":
-                j = s.index("'", i + 1)
-                out.append(s[i + 1 : j])
-                i = j + 1
-            else:
-                j = i
-                while j < n and s[j] != ",":
-                    j += 1
-                out.append(_lit(s[i:j]))
-                i = j
-        return out
-
-    def _parse_wheres(self, clause: str):
-        """-> (predicate list [(ref, op, value)], fts list [(ref, query)]).
-        op ∈ {=, !=, <, <=, >, >=} — comparison operators are a free-win
-        extension (§2.2; the reference grammar only has ``=``,
-        /root/reference/server.py SQL tests)."""
-        preds, fts = [], []
-        for part in _split_outside_quotes(clause, r"\band\b"):
-            part = part.strip()
-            if not part:
-                continue
-            if m := re.fullmatch(rf"{_REF} ~ {_STR}", part):
-                fts.append((f"{m.group(1)}.{m.group(2)}", m.group(3)))
-            elif m := re.fullmatch(
-                # value lookahead: 'age >< 3' must not parse as '>'
-                # with literal '< 3'
-                rf"{_REF}\s*(<=|>=|!=|<>|=|<|>)\s*(?![<>=!])(.+)", part
-            ):
-                op = "!=" if m.group(3) == "<>" else m.group(3)
-                preds.append(
-                    (f"{m.group(1)}.{m.group(2)}", op, _lit(m.group(4)))
-                )
-            else:
-                raise ValueError(f"bad where predicate: {part!r}")
-        return preds, fts
-
-    @staticmethod
-    def _cmp(col: Column, op: str, val) -> Column:
-        lit = F.lit(val)
-        return {
-            "=": col == lit,
-            "!=": col != lit,
-            "<": col < lit,
-            "<=": col <= lit,
-            ">": col > lit,
-            ">=": col >= lit,
-        }[op]
-
-    def _update(self, text: str):
+    def _update(self, text: str, literals: list[str]):
         m = re.match(
             r"update (\w+) set (.+?)(?: where (.+))?$", text, re.IGNORECASE
         )
@@ -304,33 +284,24 @@ class SqlEngine:
             raise ValueError(f"bad update: {text!r}")
         table, sets_s, where_s = m.groups()
         assignments: dict[str, Column] = {}
-        # comma split honors quotes: set people.name = 'Smith, John'
-        for part in _split_outside_quotes(sets_s, ","):
-            sm = re.fullmatch(rf"\s*{_REF} = (.+?)\s*", part)
+        for part in sets_s.split(","):
+            sm = re.fullmatch(rf"{_REF} = (.+)", part.strip())
             if not sm:
                 raise ValueError(f"bad set clause: {part!r}")
-            assignments[sm.group(2)] = F.lit(_lit(sm.group(3)))
+            assignments[sm.group(2)] = F.lit(_lit(sm.group(3), literals))
         df = self.tables[table]
-        cond = F.lit(True)
-        if where_s:
-            preds, fts = self._parse_wheres(where_s)
-            for ref, op, val in preds:
-                if ref.split(".", 1)[1].startswith("~"):
-                    raise ValueError(
-                        "document-path predicates are not supported in "
-                        "UPDATE (select them, then save() the changed "
-                        "documents)"
-                    )
-                cond = cond & self._cmp(
-                    self._resolve({table: df}, ref), op, val
-                )
-            for ref, q in fts:
-                _, fld = ref.split(".", 1)
-                cond = cond & _fts_or_phrase(fld, q)
+        cond, paths = (
+            _where({table}, where_s, literals) if where_s else (F.lit(True), [])
+        )
+        if paths:
+            raise ValueError(
+                "document-path predicates are not supported in UPDATE "
+                "(select them, then save() the changed documents)"
+            )
         self.tables[table] = capped_checkpoint(update_where(df, cond, assignments))
         return None
 
-    def _select(self, text: str):
+    def _select(self, text: str, literals: list[str]):
         m = re.match(
             r"select (distinct )?(.+?) from (\w+)"
             r"((?: inner join \w+ on \S+ = \S+)*)"
@@ -346,58 +317,18 @@ class SqlEngine:
         (distinct_s, cols_s, table, joins_s, where_s, group_s, order_s,
          limit_s) = m.groups()
 
-        scope = {table: self.tables[table]}
-        df = self.tables[table]
-        join_specs = re.findall(
-            rf"inner join (\w+) on {_REF} = {_REF}", joins_s or "", re.IGNORECASE
-        )
-        n_joins = len(re.findall(r"\binner join\b", joins_s or "", re.IGNORECASE))
-        if len(join_specs) != n_joins:
-            # The outer select regex accepts `on \S+ = \S+`; a join whose
-            # refs aren't table.field would otherwise be silently DROPPED
-            # and the query would run un-joined on the base table.
-            raise ValueError(
-                f"join requires table.field = table.field refs: {joins_s!r}"
-            )
-        for right, lt, lf, rt, rf in join_specs:
-            lref, rref = (f"{lt}.{lf}", f"{rt}.{rf}")
-            if lt == right:
-                lref, rref = rref, lref
-            df = self._merge_join(
-                df,
-                lref.split(".", 1)[1],
-                self.tables[right],
-                rref.split(".", 1)[1],
-            )
-            scope[right] = self.tables[right]
-
+        specs = _join_specs(joins_s)
+        df = self._joined(self.tables[table], specs)
         if where_s:
-            preds, fts = self._parse_wheres(where_s)
-            for ref, op, val in preds:
-                _, fld = ref.split(".", 1)
-                if fld.startswith("~"):
-                    if op != "=":
-                        raise ValueError(
-                            f"document-path predicates support '=' only, "
-                            f"got {op!r}"
-                        )
-                    # Document path predicate: t.~hobbies[]~name = v
-                    # (example.py:324-335) — explode the path, filter the
-                    # leaf, keep one row per matching element.
-                    from hash_db_spark.operators.documents import filter_path
-
-                    leaf = fld.split("~")[-1]
-                    keep = [c for c in df.columns]
-                    df = filter_path(
-                        df, fld.lstrip("~"), val, *keep, leaf_alias=f"__m_{leaf}"
-                    ).drop(f"__m_{leaf}")
-                else:
-                    df = df.filter(
-                        self._cmp(self._resolve(scope, ref), op, val)
-                    )
-            for ref, q in fts:
-                _, fld = ref.split(".", 1)
-                df = df.filter(_fts_or_phrase(fld, q))
+            cond, paths = _where({table, *(s[2] for s in specs)}, where_s, literals)
+            for path, value in paths:
+                # Document path predicate: t.~hobbies[]~name = v
+                # (example.py:324-335) — explode the path, filter the
+                # leaf, keep one row per matching element.
+                leaf = f"__m_{path.split('~')[-1]}"
+                df = filter_path(df, path, value, *df.columns, leaf_alias=leaf).drop(leaf)
+            if cond is not None:
+                df = df.filter(cond)
 
         if group_s:
             key = group_s.split(".", 1)[1] if "." in group_s else group_s
@@ -443,8 +374,6 @@ class SqlEngine:
                     # Document path projection: select
                     # people.~hobbies[]~name (example.py:341-344) — one
                     # output row per leaf.
-                    from hash_db_spark.operators.documents import compile_path
-
                     leaf = c.split("~")[-1]
                     df, col = compile_path(df, c.lstrip("~"), leaf)
                     df = df.withColumn(leaf, col)

@@ -263,6 +263,10 @@ def test_failed_statement_leaves_stores_unchanged(spark):
         (db.sql, "insert into atom (atom_name, age) values ('b')", "arity"),
         (db.sql, "insert into atom (atom_name, age) values ('b', 1.2.3)",
          "malformed"),
+        (db.sql, "insert into atom (atom_name, age) values ('b', , 2)",
+         "empty value"),
+        (db.sql, "insert into atom (atom_name, age) values ('b', 2,)",
+         "empty value"),
         (db.sql, "update atom set atom.age = 1.2.3 where atom.atom_name = 'a'",
          "malformed"),
         (db.sql, "update atom set atom.age = 2 where atom.~tags[]~name = 'x'",

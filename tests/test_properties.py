@@ -232,7 +232,11 @@ def test_hashdb_kv_matches_dict_model(spark, monkeypatch):
 # nodes share two names across Person, PERSON and Post: Person and PERSON
 # map to one node id, which a MERGE must refuse.
 write_tables = st.sampled_from(["folks", "gear"])
-write_texts = st.text(alphabet="aZ é😀,", max_size=4)
+write_texts = st.one_of(
+    st.text(alphabet="aZ é😀,;()", max_size=4),
+    st.sampled_from(["a where b", "x order by y", "rock and roll",
+                     "g group by h", "n limit 5", "p; q", "(s, t)"]),
+)
 write_cells = st.fixed_dictionaries(
     {}, optional={"name": write_texts, "age": st.integers(0, 99),
                   "city": write_texts},
@@ -243,6 +247,11 @@ merge_nodes = st.tuples(
     st.sampled_from([{}, {"age": "1"}, {"age": "2"}]),
 )
 merge_edges = st.tuples(st.sampled_from(["KNOWS", "LIKES"]), st.booleans())
+write_updates = st.one_of(
+    st.tuples(st.just("age"), st.integers(0, 99)),
+    st.tuples(st.just("city"), write_texts),
+)
+write_rows = st.integers(1, 4)
 
 
 def _sql_lit(v) -> str:
@@ -321,25 +330,42 @@ class HashDbWriteMachine(RuleBasedStateMachine):
         edges = [tuple(r) for r in self.db.edges.collect()]
         assert sorted(edges) == sorted(self.model.edges)
 
+    def insert_stmt(self, table: str, cells: dict) -> str:
+        self.model.insert(table, cells)
+        vals = ", ".join(_sql_lit(v) for v in cells.values())
+        return f"insert into {table} ({', '.join(cells)}) values ({vals})"
+
+    def update_stmt(self, table: str, update: tuple, row: int) -> str:
+        """'' when the table does not exist yet."""
+        if table not in self.model.tables:
+            return ""
+        col, value = update
+        self.model.update(table, col, value, ("id", row))
+        return (f"update {table} set {table}.{col} = {_sql_lit(value)} "
+                f"where {table}.id = {row}")
+
     @rule(table=write_tables, cells=write_cells)
     def insert(self, table, cells):
-        cols = ", ".join(cells)
-        vals = ", ".join(_sql_lit(v) for v in cells.values())
-        self.db.sql(f"insert into {table} ({cols}) values ({vals})")
-        self.model.insert(table, cells)
+        self.db.sql(self.insert_stmt(table, cells))
         self.check_table(table)
 
-    @rule(table=write_tables, col=st.sampled_from(["age", "city"]),
-          value=st.integers(0, 99), text=write_texts,
-          row=st.integers(1, 4))
-    def update(self, table, col, value, text, row):
-        if table not in self.model.tables:
-            return
-        value = value if col == "age" else text
-        self.db.sql(f"update {table} set {table}.{col} = {_sql_lit(value)} "
-                    f"where {table}.id = {row}")
-        self.model.update(table, col, value, ("id", row))
-        self.check_table(table)
+    @rule(table=write_tables, update=write_updates, row=write_rows)
+    def update(self, table, update, row):
+        if stmt := self.update_stmt(table, update, row):
+            self.db.sql(stmt)
+            self.check_table(table)
+
+    @rule(writes=st.lists(
+        st.one_of(st.tuples(write_tables, write_cells),
+                  st.tuples(write_tables, write_updates, write_rows)),
+        min_size=2, max_size=3))
+    def script(self, writes):
+        """Two or three writes as one sql_script."""
+        stmts = [self.insert_stmt(*w) if len(w) == 2 else self.update_stmt(*w)
+                 for w in writes]
+        assert self.db.sql_script("; ".join(stmts)) is None
+        for table in {w[0] for w in writes} & self.model.tables.keys():
+            self.check_table(table)
 
     @rule(first=merge_nodes,
           rest=st.lists(st.tuples(merge_edges, merge_nodes), max_size=2))

@@ -143,6 +143,8 @@ def test_bad_statements_raise(engine):
         engine.sql("drop table people")
     with pytest.raises(ValueError):
         engine.sql("select * from people where people.age >< 3")
+    with pytest.raises(ValueError, match="unterminated"):
+        engine.sql("select * from people where people.people_name = 'Sam")
 
 
 def test_group_by_without_aggregate_is_distinct_keys(engine):
@@ -256,6 +258,29 @@ def test_string_literals_preserve_whitespace_and_keywords(spark):
     rows = eng.sql("select * from songs where songs.artist = 'A  B'").collect()
     assert [r["title"] for r in rows] == ["x"]
 
+    # clause keywords, ';' and ',' inside literals, through SELECT WHERE,
+    # UPDATE SET and WHERE, and a script
+    from hash_db_spark.api import HashDb
+
+    db = HashDb(spark)
+    values = [" where ", "c order by d", "e group by f.g", "h limit 5",
+              "a;b", "x, y", "p and q"]
+    for v in values:
+        db.sql(f"insert into odd (v) values ('{v}')")
+    for v in values:
+        assert [r["v"] for r in db.sql(f"select * from odd where odd.v = '{v}'")] == [v]
+        db.sql(f"update odd set odd.w = '{v}', odd.n = 1 where odd.v = '{v}'")
+    assert sorted((r["v"], r["w"], r["n"]) for r in db.sql("select * from odd")) == (
+        sorted((v, v, 1) for v in values)
+    )
+    rows = db.sql_script(
+        "; ".join(f"insert into odd2 (v) values ('{v}')" for v in values)
+        + f"; update odd2 set odd2.w = '{values[0]}' where odd2.v = '{values[4]}'"
+        + f"; select * from odd2 where odd2.v = '{values[4]}'"
+    )
+    assert [(r["v"], r["w"]) for r in rows] == [(values[4], values[0])]
+    assert sorted(r["v"] for r in db.sql("select * from odd2")) == sorted(values)
+
 
 def test_unparseable_aggregate_and_join_raise_not_degrade(engine):
     """Silently-wrong shapes now raise: an unqualified aggregate must
@@ -267,6 +292,12 @@ def test_unparseable_aggregate_and_join_raise_not_degrade(engine):
         engine.sql("select sum(age) from people group by people.age")
     with _pytest.raises(ValueError, match="table.field"):
         engine.sql("select * from items inner join people on people = id")
+    # an ON clause that never names the joined table
+    for stmt in ("select * from items inner join people "
+                 "on items.people = products.id",
+                 "create join inner join people on items.people = products.id"):
+        with _pytest.raises(ValueError, match="exactly one side"):
+            engine.sql(stmt)
     with _pytest.raises(ValueError, match="ambiguous driving table"):
         engine.sql(
             "create join inner join people on items.people = people.id "
